@@ -258,17 +258,14 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.benchmark:
         bench = spark.read.parquet(args.benchmark)
-        shingle_backend = "arrow"
         cont = ngram_contamination(
             cur, bench, idc, txc, threshold=args.contamination_threshold,
-            backend=shingle_backend,
         )
         cur, m = checkpointed(cur.join(
             cont.filter("NOT is_contaminated").select(idc), idc, "inner"
         ))
         record("decontamination", n, m,
-               threshold=args.contamination_threshold,
-               shingle_backend=shingle_backend)
+               threshold=args.contamination_threshold)
         n = m
 
     if args.min_quality is not None:

@@ -3,18 +3,18 @@
 The classic n-gram profile method (Cavnar & Trenkle 1994, "N-Gram-Based
 Text Categorization") with add-half-smoothed log-likelihood scoring
 (Dunning 1994) over CHARACTER BIGRAMS, quantized to integer milli-nats
-so every backend — the Arrow batch scorer, the pure-Catalyst expression,
-and the DuckDB oracle — sums the SAME integers in any order and lands on
-the SAME totals exactly (no float-accumulation drift, repr-hash safe).
+so the Arrow batch scorer and the DuckDB oracle sum the SAME integers in
+any order and land on the SAME totals exactly (no float-accumulation
+drift, repr-hash safe).
 
 The per-language profiles are built at import time from small embedded
 top-frequency word lists (public knowledge: the most common words of
 each language, frequency-ordered, accents kept — 'é'/'ñ'/'ß' are strong
 signals). Rank is used as a linear frequency proxy (weight = N - rank).
-The whole model is ~1.3k integers; it inlines into a Catalyst map
-literal or a DuckDB VALUES table.
+The whole model is ~1.3k integers; it inlines into a DuckDB VALUES
+table.
 
-Decision rule (identical in every backend, in this order):
+Decision rule (identical in the scorer and the oracle, in this order):
   n < MIN_GRAMS                        -> 'unknown'
   best - second < MARGIN_MILLI * n     -> 'unknown'
   else argmax with precedence LANGS    -> that language
@@ -175,10 +175,9 @@ _WORDS = {
 _ACCENTS = "".join(sorted(set("àâäáçèéêëîïíñóôöòùûüúßœæÿìãõ")))
 _ALPHA = " " + "abcdefghijklmnopqrstuvwxyz" + _ACCENTS
 # uppercase counterparts with an unambiguous 1:1 lowercase mapping that
-# every engine (Python str.lower, Spark's Locale.ROOT lower, DuckDB's
-# utf8proc lower) agrees on. 'ß' has no 1-char uppercase ('SS'); its
-# capital form ẞ (U+1E9E) lowers to ß in all three, so it is added
-# explicitly.
+# both engines (Python str.lower, DuckDB's utf8proc lower) agree on.
+# 'ß' has no 1-char uppercase ('SS'); its capital form ẞ (U+1E9E)
+# lowers to ß in both, so it is added explicitly.
 _UPPER = "".join(
     sorted(
         {
@@ -191,19 +190,19 @@ _UPPER = "".join(
 )
 # PRE-STRIP BEFORE lower(): collapse every run outside the case-extended
 # known alphabet to one space, THEN lowercase. lower() only ever sees
-# characters whose lowercase mapping is identical across Python re /
-# Java (Spark) / RE2 (DuckDB) — so cross-backend bit-parity holds BY
-# CONSTRUCTION for arbitrary input (Turkish dotted I, ligatures,
-# combining marks are stripped identically everywhere instead of
-# depending on three engines' case-folding corner cases). The regex is
-# a literal negated character class, identical in all three engines.
+# characters whose lowercase mapping is identical in Python re and RE2
+# (DuckDB) — so cross-engine bit-parity holds BY CONSTRUCTION for
+# arbitrary input (Turkish dotted I, ligatures, combining marks are
+# stripped identically everywhere instead of depending on each engine's
+# case-folding corner cases). The regex is a literal negated character
+# class, identical in both engines.
 _NORM_RE_SRC = f"[^{_ALPHA[1:]}{_UPPER} ]+"
 _NORM_RE = re.compile(_NORM_RE_SRC)
 
 
 def _normalize(text: str) -> str:
     """collapse non-alphabet runs to ' ' → lower → trim → pad with the
-    word-boundary marker. EVERY backend reproduces this exactly (see
+    word-boundary marker. The DuckDB oracle reproduces this exactly (see
     ``_NORM_RE_SRC``: strip precedes lower, so lower() never sees a
     codepoint with an engine-dependent case mapping)."""
     return " " + _NORM_RE.sub(" ", text).lower().strip() + " "
@@ -242,8 +241,6 @@ def bigram_tables() -> tuple[dict[str, dict[str, int]], dict[str, int]]:
         fallbacks[lang] = round(1000 * log(0.5 / denom))
     return tables, fallbacks
 
-
-# ---------------------------------------------------------------- arrow
 
 @lru_cache(maxsize=1)
 def _score_matrix() -> tuple[np.ndarray, dict[int, str]]:
@@ -319,104 +316,17 @@ def _arrow_lang_col(text_col: str) -> Column:
     return lid(F.col(text_col))
 
 
-# ----------------------------------------------------------------- expr
-
-def _sql_map(table: dict[str, int]) -> str:
-    items = ", ".join(f"'{bg}', {s}L" for bg, s in sorted(table.items()))
-    return f"map({items})"
-
-
-def _with_expr_lang_cols(
-    df: DataFrame, text_col: str
-) -> tuple[DataFrame, dict[str, Column], list[str]]:
-    """Pure-Catalyst scoring: the normalized string and the bigram array
-    are materialized as REAL columns before any lambda touches them (HOF
-    lambdas get no common-subexpression elimination — an inline
-    normalize would re-run the regex per element), then one interpreted
-    ``aggregate`` fold per language over an inlined map literal. Zero
-    shuffle, zero Python — the oracle-shape reference backend (the
-    Arrow backend is the fast default; HOF lambdas are interpreted, see
-    BENCH/BASELINE.md)."""
-    tables, fallbacks = bigram_tables()
-    s, bgs = "__lid_s", "__lid_bgs"
-    out = df.withColumn(
-        s,
-        F.expr(
-            f"concat(' ', trim(lower(regexp_replace({text_col}, "
-            f"'{_NORM_RE_SRC}', ' '))), ' ')"
-        ),
-    ).withColumn(
-        bgs,
-        F.expr(
-            f"transform(sequence(1, greatest(char_length({s}) - 1, 1)), "
-            f"i -> substring({s}, i, 2))"
-        ),
-    )
-    n = F.expr(f"char_length({s}) - 1").cast("long")
-    scores = {
-        lang: F.expr(
-            f"aggregate({bgs}, CAST(0 AS BIGINT), (acc, x) -> "
-            f"acc + coalesce(element_at({_sql_map(tables[lang])}, x), "
-            f"{fallbacks[lang]}L))"
-        )
-        for lang in LANGS
-    }
-    return out, {"n": n, **scores}, [s, bgs]
-
-
-def _expr_decision(cols: dict[str, Column]) -> dict[str, Column]:
-    n = cols["n"]
-    arr = F.array(*[cols[lang] for lang in LANGS])
-    best = F.array_max(arr)
-    second = F.element_at(F.array_sort(arr), len(LANGS) - 1)
-    margin = best - second
-    pick = F.lit(LANGS[-1])
-    for lang in reversed(LANGS[:-1]):
-        pick = F.when(cols[lang] == best, F.lit(lang)).otherwise(pick)
-    pred = F.when(
-        n.isNull()
-        | (n < MIN_GRAMS)
-        | (margin < F.lit(MARGIN_MILLI) * n),
-        F.lit("unknown"),
-    ).otherwise(pick)
-    return {
-        "lang_pred": pred,
-        "lang_margin": F.coalesce(margin, F.lit(0).cast("long")),
-        "lang_grams": F.coalesce(n.cast("int"), F.lit(0)),
-    }
-
-
-def with_lang_scores(
-    df: DataFrame, text_col: str = "text", backend: str = "arrow"
-) -> DataFrame:
+def with_lang_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Append ``lang_pred`` / ``lang_margin`` / ``lang_grams``.
 
-    backend='arrow' (default): one vectorized Arrow batch scorer —
-    narrow, zero-shuffle, int64 gather-sums. backend='expr': the same
-    integers via pure Catalyst HOF folds (runs where Python workers
-    can't; interpreted, so slower on wide corpora). Both backends are
-    bit-identical (pytest-pinned) and match the DuckDB oracle built by
-    :func:`oracle_fragments`."""
-    if backend == "arrow":
-        tmp = "__lid"
-        out = df.withColumn(tmp, _arrow_lang_col(text_col))
-        for f in _LID_SCHEMA.fieldNames():
-            out = out.withColumn(f, F.col(f"{tmp}.{f}"))
-        return out.drop(tmp)
-    if backend == "expr":
-        out, cols, tmp = _with_expr_lang_cols(df, text_col)
-        # materialize each interpreted fold ONCE as a real column; the
-        # decision tree below references them repeatedly
-        mat: dict[str, Column] = {}
-        for key in cols:
-            name = f"__lid_{key}"
-            out = out.withColumn(name, cols[key])
-            mat[key] = F.col(name)
-            tmp.append(name)
-        for name, col in _expr_decision(mat).items():
-            out = out.withColumn(name, col)
-        return out.drop(*tmp)
-    raise ValueError(f"unknown langid backend: {backend!r}")
+    One vectorized Arrow batch scorer — narrow, zero-shuffle, int64
+    gather-sums. Value-identical to the DuckDB oracle built by
+    :func:`oracle_fragments` (pytest-pinned)."""
+    tmp = "__lid"
+    out = df.withColumn(tmp, _arrow_lang_col(text_col))
+    for f in _LID_SCHEMA.fieldNames():
+        out = out.withColumn(f, F.col(f"{tmp}.{f}"))
+    return out.drop(tmp)
 
 
 # --------------------------------------------------------------- oracle
@@ -426,7 +336,7 @@ def oracle_fragments(table: str = "documents", text_col: str = "text",
     """ANSI/DuckDB SQL computing the same integer scores + decision:
     explode bigrams → LEFT JOIN an inlined VALUES score table → integer
     sums → the shared decision CASE. Used by ``oracle_sql()`` so the
-    driver's DuckDB run is value-identical to either Spark backend."""
+    driver's DuckDB run is value-identical to :func:`with_lang_scores`."""
     tables, fallbacks = bigram_tables()
     vocab = sorted(set().union(*[t.keys() for t in tables.values()]))
     rows = ", ".join(

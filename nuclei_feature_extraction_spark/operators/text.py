@@ -135,22 +135,17 @@ def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     return out.withColumn("quality_score", F.round(score, 6))
 
 
-def with_lang_id(
-    df: DataFrame, text_col: str = "text", backend: str = "arrow"
-) -> DataFrame:
+def with_lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Language ID via the character-bigram log-likelihood model in
     :mod:`..operators.langid` (Cavnar & Trenkle 1994 profiles over
-    embedded public word lists, integer milli-nat scoring — en/de/es/fr
-    or 'unknown'). Adds ``lang_pred`` / ``lang_margin`` / ``lang_grams``
-    plus the legacy ``stopword_ratio`` heuristic column. backend:
-    'arrow' (vectorized batch scorer, default) or 'expr' (pure Catalyst
-    HOF folds — bit-identical, runs without Python workers)."""
+    embedded public word lists, integer milli-nat scoring —
+    en/de/es/fr/it/pt or 'unknown', one vectorized Arrow batch scorer).
+    Adds ``lang_pred`` / ``lang_margin`` / ``lang_grams`` plus the
+    legacy ``stopword_ratio`` heuristic column."""
     from .langid import with_lang_scores
 
     return with_lang_scores(
-        df.withColumn("stopword_ratio", stopword_ratio(text_col)),
-        text_col,
-        backend=backend,
+        df.withColumn("stopword_ratio", stopword_ratio(text_col)), text_col
     )
 
 

@@ -12,7 +12,7 @@ The fused plan moves the entire computation into ONE Arrow pass over
 NARROW input rows (the 6 transcript columns):
 
     scan (6 cols) → repartition(conv_id) → sortWithinPartitions
-      → mapInPandas[ kernels + window features + as-of merges ] → sink
+      → mapInArrow[ kernels + window features + as-of merges ] → sink
 
 Wide rows exist only AFTER the last exchange, flowing straight to the
 sink. Side tables ride in as broadcast sorted arrays (searchsorted —
@@ -28,7 +28,7 @@ there (leakage, determinism, text equality) transfers.
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
@@ -110,10 +110,10 @@ def _window_features_pdf(
     seg = np.cumsum(first)
 
     tlen = pdf["tlen"].to_numpy(dtype=np.float64)
-    # role may arrive CATEGORICAL (the Arrow fused backend dictionary-
-    # encodes it so strings never box into Python objects); lags are
-    # then computed on the int8 codes and emitted as Categoricals with
-    # the same categories — value-identical after decode.
+    # role arrives CATEGORICAL from the fused plan (dictionary-encoded
+    # so strings never box into Python objects) and as strings from the
+    # streaming path; categorical lags are computed on the codes and
+    # emitted as Categoricals with the same categories.
     role_cat: pd.Categorical | None = None
     if isinstance(pdf["role"].dtype, pd.CategoricalDtype):
         role_cat = pdf["role"].array
@@ -271,17 +271,16 @@ def _window_features_pdf(
     return res
 
 
-def _asof_arrays(
-    side: pd.DataFrame, ts_col: str, tie_cols: Sequence[str], value_cols: Sequence[str]
-):
-    """Sorted flat arrays for the broadcast as-of. String-typed value
-    columns are stored as (codes, categories) — integer codes broadcast
-    smaller and, in the Arrow backend, decode C-side into the output
-    batch so no per-row Python string is ever built."""
-    side = side.sort_values([ts_col, *tie_cols], kind="mergesort")
-    rts = side[ts_col].to_numpy(dtype="datetime64[us]").astype(np.int64)
+def _asof_arrays(side: pd.DataFrame):
+    """Sorted flat arrays for the broadcast keyless as-of; ``effective_ts``
+    holds UTC epoch microseconds, every other column is a value. String
+    value columns are stored as (codes, categories) — integer codes
+    broadcast smaller and decode C-side into the output batch so no
+    per-row Python string is ever built."""
+    side = side.sort_values("effective_ts", kind="mergesort")
+    rts = side["effective_ts"].to_numpy(dtype=np.int64)
     vals: dict[str, tuple] = {}
-    for c in value_cols:
+    for c in side.columns.drop("effective_ts"):
         arr = side[c].to_numpy()
         if arr.dtype.kind == "O":
             codes, cats = pd.factorize(side[c], sort=False)
@@ -291,44 +290,40 @@ def _asof_arrays(
     return rts, vals
 
 
+def _with_epoch_us(side: DataFrame) -> DataFrame:
+    """``effective_ts`` as UTC epoch microseconds. ``toPandas()`` would
+    render a timestamp as session-local wall time, while the Arrow
+    batches carry UTC epoch values; integers compare equal in any
+    session time zone."""
+    return side.withColumn(
+        "effective_ts", F.unix_micros(F.col("effective_ts").cast("timestamp"))
+    )
+
+
 def _searchsorted_pick(
     rts: np.ndarray, vals: dict[str, tuple], ts_us: np.ndarray
-) -> dict[str, tuple]:
-    """Rightmost side row with rts <= ts per output row. Returns, per
-    column, ("num", ndarray) or ("cat", codes, cats) with -1 = no match
-    — the caller decodes per backend (object decode for the pandas
-    path, dictionary decode for the Arrow path)."""
+) -> dict[str, object]:
+    """Rightmost side row with rts <= ts per output row, per value
+    column: float64 with NaN, object with None, or a Categorical with
+    code -1 where no side row qualifies."""
     idx = np.searchsorted(rts, ts_us, side="right") - 1
     ok = idx >= 0
     safe = np.clip(idx, 0, None)
-    out: dict[str, tuple] = {}
+    out: dict[str, object] = {}
     for c, spec in vals.items():
-        if spec[0] == "num":
-            arr = spec[1]
-            if arr.dtype.kind == "f":
-                v = arr[safe].astype(np.float64)
-                v[~ok] = np.nan
-                out[c] = ("num", v)
-            else:
-                v = arr[safe].astype(object)
-                v[~ok] = None
-                out[c] = ("num", v)
-        else:
-            _, codes, cats = spec
-            p = codes[safe].copy()
+        if spec[0] == "cat":
+            p = spec[1][safe]
             p[~ok] = -1
-            out[c] = ("cat", p, cats)
+            out[c] = pd.Categorical.from_codes(p, categories=pd.Index(spec[2]))
+        elif spec[1].dtype.kind == "f":
+            v = spec[1][safe].astype(np.float64)
+            v[~ok] = np.nan
+            out[c] = v
+        else:
+            v = spec[1][safe].astype(object)
+            v[~ok] = None
+            out[c] = v
     return out
-
-
-def _decode_cat_object(codes: np.ndarray, cats: np.ndarray) -> np.ndarray:
-    """(codes, cats) -> object ndarray with None for -1 (the exact
-    value layout the pandas serializer shipped before coding)."""
-    v = np.empty(len(codes), dtype=object)
-    m = codes >= 0
-    v[m] = cats[codes[m]]
-    v[~m] = None
-    return v
 
 
 KERNEL_TIMER_FAMILIES = (
@@ -343,7 +338,7 @@ def kernel_timing_accumulators(spark) -> dict:
     over tasks — divide by executor cores for wall share). Lets a run
     manifest expose e.g. the documented hull/shape share per-run.
 
-    AT-LEAST-ONCE semantics: the adds happen inside a mapInPandas
+    AT-LEAST-ONCE semantics: the adds happen inside a mapInArrow
     TRANSFORMATION, where Spark only guarantees at-least-once execution
     — task retries, speculative duplicates, and plan-branch
     recomputation each add their CPU time again. The numbers are a
@@ -364,17 +359,17 @@ def build_features_fused(
     num_partitions: int | None = None,
     max_broadcast_side_rows: int = 2_000_000,
     kernel_timers: dict | None = None,
-    backend: str = "arrow",
 ) -> DataFrame:
     """Single-shuffle full feature vector; column-compatible with
     ``build_features(df, ["all"], side_profile, side_config)``.
 
-    ``backend='arrow'`` (default) runs the kernel pass as ``mapInArrow``:
-    strings never box into Python objects (conv_id/role dictionary-
-    encode C-side, text/tool pass through zero-copy, string outputs
-    decode from dictionary codes C-side). ``backend='pandas'`` keeps the
-    original ``mapInPandas`` formulation — value-identical output,
-    pinned by tests/test_fused.py.
+    The kernel pass is one ``mapInArrow``: strings never box into
+    Python objects (conv_id/role dictionary-encode C-side, text/tool
+    pass through zero-copy, string outputs decode from dictionary codes
+    C-side). Every timestamp — the input rows' and the broadcast side
+    arrays' — is compared as UTC epoch microseconds, so the output does
+    not depend on the session time zone. A null ``conv_id`` is one
+    conversation, as in the composable pipeline's ``partitionBy``.
 
     Side tables within ``max_broadcast_side_rows`` ride into the kernel
     as driver-built broadcast arrays (four flat numpy arrays sorted by
@@ -419,23 +414,21 @@ def build_features_fused(
         # Python to build and pickles as 10^5 objects; four numpy arrays
         # build in ~ms and broadcast as buffers. Sort by (conv, ts, plan)
         # keeps within-conv ts order and the greatest-plan tie-break.
-        ppd = side_profile.toPandas().sort_values(
+        ppd = _with_epoch_us(side_profile).toPandas().sort_values(
             ["conv_id", "effective_ts", "plan"], kind="mergesort"
         )
         plan_codes, plan_cats = pd.factorize(ppd["plan"], sort=False)
         profile_arrays = (
             ppd["conv_id"].to_numpy(dtype="U"),
-            ppd["effective_ts"].to_numpy(dtype="datetime64[us]").astype(np.int64),
+            ppd["effective_ts"].to_numpy(dtype=np.int64),
             plan_codes.astype(np.int64),
             np.asarray(plan_cats, dtype=object),
             ppd["score"].to_numpy(dtype=np.float64),
         )
     cfg_arrays = None
     if side_config is not None:
-        cpd = side_config.toPandas()
-        cfg_arrays = _asof_arrays(
-            cpd, "effective_ts", (), [c for c in cpd.columns if c != "effective_ts"]
-        )
+        cpd = _with_epoch_us(side_config).toPandas()
+        cfg_arrays = _asof_arrays(cpd)
     bc = spark.sparkContext.broadcast((profile_arrays, cfg_arrays))
 
     kcols = feature_names(("cooc", "runlen", "xcooc", "shape"), lags, levels)
@@ -489,121 +482,19 @@ def build_features_fused(
         "conv_id", "ts", "turn_idx"
     )
 
-    def process(chunk: pd.DataFrame, conv_ids=None) -> pd.DataFrame:
-        import time as _time
-
-        prof, cfg = bc.value
-        # Arrow backend marker: role arrives dictionary-encoded, so the
-        # string-valued side picks stay coded too and decode C-side
-        coded = isinstance(chunk["role"].dtype, pd.CategoricalDtype)
-        tm: dict | None = {} if kernel_timers is not None else None
-        base = compute_features_pdf(
-            chunk, ("cooc", "runlen", "xcooc", "shape"), lags, levels,
-            passthrough=True, assume_sorted=True, timings=tm,
-        )
-        _t0 = _time.perf_counter()
-        win = _window_features_pdf(base, gap_minutes)
-        if tm is not None:
-            tm["window"] = _time.perf_counter() - _t0
-            _t0 = _time.perf_counter()
-        # column-wise adoption instead of pd.concat(axis=1): concat
-        # consolidates the two frames' float blocks (a full-width
-        # memcpy); per-column assignment just appends block refs
-        out = base
-        for c in win.columns:
-            out[c] = win[c].values
-        ts_us = out["ts"].to_numpy(dtype="datetime64[us]").astype(np.int64)
-        if prof is not None:
-            pconv, prts, ppl_codes, ppl_cats, psc = prof
-            conv_arr = out["conv_id"].to_numpy()
-            # per-CONVERSATION string searches (one per conv, repeated to
-            # rows), then one fully VECTORIZED bounded binary search for
-            # the rightmost side row with rts ≤ ts inside each conv's
-            # side block — ~log2(max block) numpy passes, zero Python
-            # per-row/per-conv work (the round-2 per-conversation loop
-            # pinned one core on many-conversation chunks)
-            starts = np.flatnonzero(np.r_[True, conv_arr[1:] != conv_arr[:-1]])
-            counts = np.diff(np.r_[starts, len(out)])
-            # natural-width str, NOT pconv.dtype: casting to the profile's
-            # fixed '<U' width would truncate longer out-of-profile ids to
-            # a prefix that can falsely match a profile id
-            cids = (
-                conv_ids(starts) if conv_ids is not None
-                else conv_arr[starts].astype(str)
-            )
-            blo = np.repeat(np.searchsorted(pconv, cids, side="left"), counts)
-            bhi = np.repeat(np.searchsorted(pconv, cids, side="right"), counts)
-            lo, hi = blo.copy(), bhi.copy()
-            while True:
-                active = lo < hi
-                if not active.any():
-                    break
-                mid = (lo + hi) >> 1
-                le = np.zeros(len(lo), dtype=bool)
-                am = mid[active]
-                le[active] = prts[am] <= ts_us[active]
-                lo = np.where(active & le, mid + 1, lo)
-                hi = np.where(active & ~le, mid, hi)
-            idx = lo - 1
-            ok = idx >= blo  # empty block (blo == bhi) → idx < blo
-            safe = np.clip(idx, 0, None)
-            pick = ppl_codes[safe].copy()
-            pick[~ok] = -1
-            score = psc[safe].astype(np.float64)
-            score[~ok] = np.nan
-            if coded:
-                out["plan"] = pd.Categorical.from_codes(
-                    pick, categories=pd.Index(ppl_cats)
-                )
-            else:
-                out["plan"] = _decode_cat_object(pick, ppl_cats)
-            out["score"] = score
-        if cfg is not None:
-            picked = _searchsorted_pick(cfg[0], cfg[1], ts_us)
-            for c, spec in picked.items():
-                if spec[0] == "num":
-                    out[c] = spec[1]
-                elif coded:
-                    out[c] = pd.Categorical.from_codes(
-                        spec[1], categories=pd.Index(spec[2])
-                    )
-                else:
-                    out[c] = _decode_cat_object(spec[1], spec[2])
-        if tm is not None:
-            tm["sidelookup"] = _time.perf_counter() - _t0
-            for fam, secs in tm.items():
-                acc = kernel_timers.get(fam)
-                if acc is not None:
-                    acc.add(secs)
-        return out
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            last_conv = pdf["conv_id"].iloc[-1]
-            tail = (pdf["conv_id"] == last_conv).to_numpy()
-            carry = pdf[tail]
-            head = pdf[~tail]
-            if len(head):
-                yield process(head)
-        if carry is not None and len(carry):
-            yield process(carry)
-
     out_names = [f.name for f in fields]
     passthrough_names = set(df.columns) | {"tlen"}
 
-    def gen_arrow(batches):
-        """Arrow-native twin of ``gen`` (guide §4): the six narrow input
-        columns cross the boundary ONCE as Arrow buffers; conv_id/role
-        are dictionary-encoded (C-side) instead of boxed into Python
-        strings; text/tool pass through into the output batch ZERO-COPY
-        without ever becoming Python objects; string outputs (role lags,
-        side picks) are built as dictionary codes and decoded C-side.
-        Value-identical to the pandas backend (pinned by test)."""
+    def gen(batches):
+        """The six narrow input columns cross the boundary ONCE as Arrow
+        buffers; conv_id/role are dictionary-encoded (C-side)
+        instead of boxed into Python strings; text/tool pass through
+        into the output batch ZERO-COPY without ever becoming Python
+        objects; string outputs (role lags, side picks) are built as
+        dictionary codes and decoded C-side. A conversation that runs
+        past a batch boundary is carried into the next batch whole."""
+        import time as _time
+
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -620,26 +511,20 @@ def build_features_fused(
                     ),
                 )
                 return da.dictionary_decode()
-            npv = v.to_numpy()
-            if npv.dtype.kind in "fO":
-                # from_pandas=True masks NaN/None → null, matching the
-                # pandas serializer's float handling exactly
-                return pa.array(npv, from_pandas=True)
-            return pa.array(npv)
+            # from_pandas=True masks NaN/None → null
+            return pa.array(v.to_numpy(), from_pandas=True)
 
         def emit(tbl: "pa.Table") -> "pa.RecordBatch":
             tbl = tbl.combine_chunks()
             col = {nm: tbl.column(nm).chunk(0) for nm in tbl.column_names}
-            conv_pa = col["conv_id"]
-            conv_codes = pc.dictionary_encode(conv_pa).indices.to_numpy(
+            cd = pc.dictionary_encode(col["conv_id"])
+            # null conv_ids share one code of their own: one conversation
+            conv_codes = cd.indices.fill_null(len(cd.dictionary)).to_numpy(
                 zero_copy_only=False
             ).astype(np.int64, copy=False)
             rd = pc.dictionary_encode(col["role"])
-            r_ind = rd.indices
-            if r_ind.null_count:
-                r_ind = r_ind.fill_null(-1)
             role_cat = pd.Categorical.from_codes(
-                r_ind.to_numpy(zero_copy_only=False),
+                rd.indices.fill_null(-1).to_numpy(zero_copy_only=False),
                 categories=rd.dictionary.to_pylist(),
             )
             tool_isnull = col["tool"].is_null().to_numpy(zero_copy_only=False)
@@ -654,14 +539,78 @@ def build_features_fused(
                 }
             )
 
-            def conv_ids(starts: np.ndarray) -> np.ndarray:
-                return np.asarray(
-                    conv_pa.take(pa.array(starts)).to_pylist(), dtype=str
+            prof, cfg = bc.value
+            tm: dict | None = {} if kernel_timers is not None else None
+            out = compute_features_pdf(
+                chunk, ("cooc", "runlen", "xcooc", "shape"), lags, levels,
+                passthrough=True, assume_sorted=True, timings=tm,
+            )
+            _t0 = _time.perf_counter()
+            win = _window_features_pdf(out, gap_minutes)
+            if tm is not None:
+                tm["window"] = _time.perf_counter() - _t0
+                _t0 = _time.perf_counter()
+            # column-wise adoption instead of pd.concat(axis=1): concat
+            # consolidates the two frames' float blocks (a full-width
+            # memcpy); per-column assignment just appends block refs
+            for c in win.columns:
+                out[c] = win[c].values
+            del win  # setitem copied its columns: free the block now
+            ts_us = out["ts"].to_numpy(dtype="datetime64[us]").astype(np.int64)
+            if prof is not None:
+                pconv, prts, ppl_codes, ppl_cats, psc = prof
+                # per-CONVERSATION string searches (one per conv, repeated
+                # to rows), then one fully VECTORIZED bounded binary
+                # search for the rightmost side row with rts ≤ ts inside
+                # each conv's side block — ~log2(max block) numpy passes,
+                # zero Python per-row/per-conv work (the round-2
+                # per-conversation loop pinned one core on
+                # many-conversation chunks)
+                starts = np.flatnonzero(
+                    np.r_[True, conv_codes[1:] != conv_codes[:-1]]
                 )
-
-            out_pdf = process(chunk, conv_ids=conv_ids)
+                counts = np.diff(np.r_[starts, len(out)])
+                # natural-width str, NOT pconv.dtype: casting to the
+                # profile's fixed '<U' width would truncate longer
+                # out-of-profile ids to a prefix that can falsely match
+                cids = np.asarray(
+                    col["conv_id"].take(pa.array(starts)).to_pylist(), dtype=str
+                )
+                blo = np.repeat(np.searchsorted(pconv, cids, side="left"), counts)
+                bhi = np.repeat(np.searchsorted(pconv, cids, side="right"), counts)
+                lo, hi = blo.copy(), bhi.copy()
+                while True:
+                    active = lo < hi
+                    if not active.any():
+                        break
+                    mid = (lo + hi) >> 1
+                    le = np.zeros(len(lo), dtype=bool)
+                    am = mid[active]
+                    le[active] = prts[am] <= ts_us[active]
+                    lo = np.where(active & le, mid + 1, lo)
+                    hi = np.where(active & ~le, mid, hi)
+                idx = lo - 1
+                ok = idx >= blo  # empty block (blo == bhi) → idx < blo
+                safe = np.clip(idx, 0, None)
+                pick = ppl_codes[safe]
+                pick[~ok] = -1
+                score = psc[safe].astype(np.float64)
+                score[~ok] = np.nan
+                out["plan"] = pd.Categorical.from_codes(
+                    pick, categories=pd.Index(ppl_cats)
+                )
+                out["score"] = score
+            if cfg is not None:
+                for c, v in _searchsorted_pick(cfg[0], cfg[1], ts_us).items():
+                    out[c] = v
+            if tm is not None:
+                tm["sidelookup"] = _time.perf_counter() - _t0
+                for fam, secs in tm.items():
+                    acc = kernel_timers.get(fam)
+                    if acc is not None:
+                        acc.add(secs)
             arrays = [
-                col[nm] if nm in passthrough_names else to_arrow_col(out_pdf[nm])
+                col[nm] if nm in passthrough_names else to_arrow_col(out[nm])
                 for nm in out_names
             ]
             return pa.RecordBatch.from_arrays(arrays, names=out_names)
@@ -674,7 +623,12 @@ def build_features_fused(
             if tbl.num_rows == 0:
                 continue
             conv = tbl.column("conv_id")
-            n_tail = pc.sum(pc.equal(conv, conv[-1])).as_py()
+            if conv[-1].is_valid:
+                n_tail = pc.sum(pc.equal(conv, conv[-1])).as_py()
+            else:
+                # nulls sort first, so a null last id means every row
+                # of the table belongs to the null conversation
+                n_tail = conv.null_count
             head = tbl.slice(0, tbl.num_rows - n_tail)
             carry = tbl.slice(tbl.num_rows - n_tail).combine_chunks()
             if head.num_rows:
@@ -682,23 +636,7 @@ def build_features_fused(
         if carry is not None and carry.num_rows:
             yield emit(carry)
 
-    if backend == "arrow":
-        # mapInArrow hands the worker RAW UTC-epoch timestamps, while
-        # the driver-built side arrays come from toPandas() (session-tz
-        # naive). The repo pins the session to UTC (get_spark), where
-        # the two representations coincide; under any other session tz
-        # the as-of searchsorted would compare skewed clocks — fall
-        # back to the pandas backend, which converts both sides with
-        # the same session tz.
-        tz = spark.conf.get("spark.sql.session.timeZone", "")
-        if tz not in ("UTC", "Etc/UTC", "GMT"):
-            out = prep.mapInPandas(gen, schema)
-        else:
-            out = prep.mapInArrow(gen_arrow, schema)
-    elif backend == "pandas":
-        out = prep.mapInPandas(gen, schema)
-    else:
-        raise ValueError(f"backend must be 'arrow' or 'pandas', got {backend!r}")
+    out = prep.mapInArrow(gen, schema)
     if fallback_profile is not None:
         from nuclei_feature_extraction_spark.operators.asof import asof_join
 

@@ -27,6 +27,15 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def driver_heap_mb(mem_total: int) -> int:
+    """Driver heap in MiB for a host with ``mem_total`` bytes of RAM: an
+    eighth of it, clamped to 1-8 GiB. A fixed large heap lets the JVM
+    outgrow a small box and get OOM-killed; the JVM still grows its heap
+    on demand up to this cap."""
+    gib = 1 << 30
+    return min(max(mem_total // 8, gib), 8 * gib) >> 20
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "nuclei-feature-extraction-spark",
@@ -49,6 +58,7 @@ def get_spark(
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", str(1 << 30))
 
     cores = default_parallelism()
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     if master is None:
         master = f"local[{cores}]"
     if shuffle_partitions is None:
@@ -79,7 +89,10 @@ def get_spark(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
             str(ARROW_BATCH_ROWS),
         )
-        .config("spark.driver.memory", os.environ.get("NFX_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("NFX_DRIVER_MEM") or f"{driver_heap_mb(ram)}m",
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -49,7 +49,7 @@ def test_package_zip(tmp_path):
     sys.path.insert(0, os.path.join(REPO, "tools"))
     import package
 
-    out = package.main()
+    out = package.main(str(tmp_path))
     assert os.path.exists(out)
     import zipfile
 
@@ -159,7 +159,7 @@ def test_spark_submit_py_files_zip(tmp_path):
     sys.path.insert(0, os.path.join(REPO, "tools"))
     import package
 
-    zip_path = package.main()
+    zip_path = package.main(str(tmp_path))
     script = str(tmp_path / "run_backfill.py")
     shutil.copy(os.path.join(REPO, "jobs", "run_backfill.py"), script)
     out = str(tmp_path / "features.parquet")

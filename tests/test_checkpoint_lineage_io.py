@@ -1,4 +1,5 @@
-"""Checkpoint/resume, lineage metrics, sink guards, streaming sessions."""
+"""Checkpoint/resume, lineage metrics, sink guards, streaming sessions,
+scan pruning."""
 
 import os
 
@@ -10,7 +11,10 @@ from nuclei_feature_extraction_spark.lineage import (
     run_with_metrics,
 )
 from nuclei_feature_extraction_spark.sources.checkpoint import CheckpointedWriter
-from nuclei_feature_extraction_spark.sources.io import write_features
+from nuclei_feature_extraction_spark.sources.io import (
+    write_features,
+    write_iceberg_style,
+)
 
 
 def test_checkpoint_resume_after_injected_crash(spark, tiny_df, tmp_path):
@@ -363,3 +367,38 @@ def test_arrow_ipc_sink_roundtrip(spark, tiny_df, tmp_path):
         with pa.ipc.open_stream(os.path.join(p, f)) as r:
             total += r.read_all().num_rows
     assert total == 7
+
+
+def _formatted_plan(df) -> str:
+    return df._jdf.queryExecution().explainString(
+        df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"
+        )
+    )
+
+
+def test_parquet_filter_pushdown_and_column_pruning(spark, tiny_df, tmp_path):
+    p = str(tmp_path / "t.parquet")
+    tiny_df.write.parquet(p)
+    df = (
+        spark.read.parquet(p)
+        .filter(F.col("conv_id") == "conv000001")
+        .select("conv_id", "turn_idx")
+    )
+    plan = _formatted_plan(df)
+    assert "PushedFilters: [IsNotNull(conv_id), EqualTo(conv_id,conv000001)]" in plan
+    # column pruning: the scan must read only the 2 projected columns
+    rs = [l for l in plan.splitlines() if "ReadSchema" in l][0]
+    assert "text" not in rs and "turn_idx" in rs
+
+
+def test_iceberg_style_partition_pruning(spark, tiny_df, tmp_path):
+    p = str(tmp_path / "iceberg_like")
+    write_iceberg_style(tiny_df, p, n_buckets=8)
+    df = spark.read.parquet(p).filter(
+        (F.col("bucket") == 3) & (F.col("dt") == "2024-02-01")
+    )
+    plan = _formatted_plan(df)
+    # partition filters prune directories before any row is read
+    assert "PartitionFilters" in plan
+    assert "bucket" in plan.split("PartitionFilters", 1)[1][:200]

@@ -332,6 +332,86 @@ def test_connected_components_long_chain_converges(spark):
     assert a2["cc_rounds"] == 2 and a2["cc_hops"] <= 3, a2
 
 
+def test_connected_components_round_plan_stays_small(spark, monkeypatch):
+    """Each round's checkpointed plan stays bounded under the default
+    hop schedule: a persisted hop keeps its whole logical plan, so the
+    self-join doubled the plan string per composed hop (369 M chars at
+    8 hops, an OutOfMemoryError on a 2 GB driver)."""
+    from nuclei_feature_extraction_spark.operators.dedup import (
+        connected_components,
+    )
+
+    pairs = spark.createDataFrame(
+        pd.DataFrame({"id_a": list(range(39)), "id_b": list(range(1, 40))})
+    )
+    plan_chars = []
+    frame_cls = type(pairs)
+    checkpoint = frame_cls.localCheckpoint
+
+    def recording(self, eager=True, *args, **kwargs):
+        if eager:
+            plan_chars.append(len(self._jdf.queryExecution().toString()))
+        return checkpoint(self, eager, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", recording)
+    audit = {}
+    out = connected_components(pairs, audit=audit).toPandas()
+    assert (out.comp == 0).all() and len(out) == 40
+    assert audit["cc_hops"] >= 8 and len(plan_chars) == audit["cc_rounds"]
+    assert max(plan_chars) < 2_000_000, plan_chars
+
+
+def test_connected_components_size_estimate_resets(spark, monkeypatch):
+    """With CBO off a join's size estimate is the product of its
+    children's, so every hop squares it; the labels carried into the
+    next round must start from a fresh estimate (without the reset it
+    passes 2^5000 by round 2 on this path)."""
+    from nuclei_feature_extraction_spark.operators import dedup
+
+    bits = []
+    reset = dedup._reset_size_estimate
+
+    def recording(df):
+        out = reset(df)
+        size = out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        bits.append(int(str(size)).bit_length())
+        return out
+
+    monkeypatch.setattr(dedup, "_reset_size_estimate", recording)
+    pairs = spark.createDataFrame(
+        pd.DataFrame({"id_a": list(range(39)), "id_b": list(range(1, 40))})
+    )
+    audit = {}
+    dedup.connected_components(pairs, audit=audit).count()
+    assert len(bits) == audit["cc_rounds"] >= 3
+    assert max(bits) < 200, bits
+
+
+def test_connected_components_deep_path_and_star(spark):
+    """A 10^5-node path plus a 1001-node star converges at the default
+    driver heap (an eighth of RAM: ~2 GB on a 16 GB box). Without the
+    plan cut and the size-estimate reset one round spent minutes
+    planning, or the driver ran out of heap."""
+    from nuclei_feature_extraction_spark.operators.dedup import (
+        connected_components,
+    )
+
+    n, hub = 100_000, 1_000_000
+    path = spark.range(n - 1).select(
+        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+    )
+    star = spark.range(1, 1001).select(
+        F.lit(hub).cast("long").alias("id_a"),
+        (F.col("id") + hub).alias("id_b"),
+    )
+    sizes = {
+        r["comp"]: r["count"]
+        for r in connected_components(path.unionByName(star))
+        .groupBy("comp").count().collect()
+    }
+    assert sizes == {0: n, hub: 1001}, sizes
+
+
 def test_connected_components_string_ids_long_chain(spark):
     """String doc ids (the common real-corpus case): F.sum over a string
     comp column is NULL, so a numeric-sum convergence check would see
@@ -666,7 +746,6 @@ def test_observe_audit_matches_eager(spark):
     for k in ("n_buckets", "max_bucket", "n_dropped_buckets",
               "n_dropped_members"):
         assert lazy[k] == eager[k], k
-    assert lazy["signature_backend"] == eager["signature_backend"] == "arrow"
     # harvest is idempotent and json-safe afterwards
     import json as _json
 

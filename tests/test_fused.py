@@ -14,20 +14,25 @@ def _sorted(pdf):
     )
 
 
-def test_fused_matches_composable(spark, tiny_df, side_profile_df, side_config_df):
+def _assert_matches_composable(
+    df, side_profile, side_config, lags=(1,), levels=(4,), **fused_kw
+):
+    """Fused == composable ``build_features(["all"])``: same rows, same
+    columns, floats allclose 1e-9, everything else equal as strings.
+    Returns the fused frame."""
     fused = _sorted(
         build_features_fused(
-            tiny_df, side_profile=side_profile_df, side_config=side_config_df,
-            lags=(1,), levels=(4,),
+            df, side_profile=side_profile, side_config=side_config,
+            lags=lags, levels=levels, **fused_kw,
         ).toPandas()
     )
     comp = _sorted(
         build_features(
-            tiny_df, ["all"], side_profile=side_profile_df,
-            side_config=side_config_df, lags=(1,), levels=(4,),
+            df, ["all"], side_profile=side_profile, side_config=side_config,
+            lags=lags, levels=levels,
         ).toPandas()
     )
-    assert len(fused) == len(comp) == tiny_df.count()
+    assert len(fused) == len(comp) == df.count() > 0
     assert set(fused.columns) == set(comp.columns), (
         sorted(set(fused.columns) ^ set(comp.columns))
     )
@@ -40,6 +45,11 @@ def test_fused_matches_composable(spark, tiny_df, side_profile_df, side_config_d
             ), f"column {c} diverges"
         else:
             assert (a.fillna("∅").astype(str) == b.fillna("∅").astype(str)).all(), c
+    return fused
+
+
+def test_fused_matches_composable(spark, tiny_df, side_profile_df, side_config_df):
+    _assert_matches_composable(tiny_df, side_profile_df, side_config_df)
 
 
 def test_fused_without_sides(spark, tiny_df):
@@ -92,28 +102,9 @@ def test_fused_broadcast_fallback_matches_composable(
 ):
     """Forcing the side tables past the broadcast guard must route them
     through the union-window as-of fallback with identical results."""
-    forced = _sorted(
-        build_features_fused(
-            tiny_df, side_profile=side_profile_df, side_config=side_config_df,
-            lags=(1,), levels=(4,), max_broadcast_side_rows=1,
-        ).toPandas()
+    _assert_matches_composable(
+        tiny_df, side_profile_df, side_config_df, max_broadcast_side_rows=1
     )
-    comp = _sorted(
-        build_features(
-            tiny_df, ["all"], side_profile=side_profile_df,
-            side_config=side_config_df, lags=(1,), levels=(4,),
-        ).toPandas()
-    )
-    assert set(forced.columns) == set(comp.columns)
-    for c in comp.columns:
-        a, b = forced[c], comp[c]
-        if a.dtype.kind in "fc" or b.dtype.kind in "fc":
-            assert np.allclose(
-                a.to_numpy(dtype=float), b.to_numpy(dtype=float),
-                rtol=1e-9, atol=1e-9, equal_nan=True,
-            ), f"column {c} diverges under fallback"
-        else:
-            assert (a.fillna("∅").astype(str) == b.fillna("∅").astype(str)).all(), c
 
 
 def test_fused_full_reference_grid_parity(spark, tiny_df, side_profile_df, side_config_df):
@@ -121,56 +112,36 @@ def test_fused_full_reference_grid_parity(spark, tiny_df, side_profile_df, side_
     (texture.rs:19-20: d∈{1,2,3,5} × K∈{4,8,16,32}) — the width used by
     tools/fullwidth_bench.py; parity must hold there, not only at the
     small default grid."""
-    lags, levels = (1, 2, 3, 5), (4, 8, 16, 32)
-    fused = _sorted(
-        build_features_fused(
-            tiny_df, side_profile=side_profile_df, side_config=side_config_df,
-            lags=lags, levels=levels,
-        ).toPandas()
-    )
-    comp = _sorted(
-        build_features(
-            tiny_df, ["all"], side_profile=side_profile_df,
-            side_config=side_config_df, lags=lags, levels=levels,
-        ).toPandas()
+    fused = _assert_matches_composable(
+        tiny_df, side_profile_df, side_config_df,
+        lags=(1, 2, 3, 5), levels=(4, 8, 16, 32),
     )
     assert len(fused.columns) > 380, len(fused.columns)
-    assert set(fused.columns) == set(comp.columns)
-    for c in comp.columns:
-        a, b = fused[c], comp[c]
-        if a.dtype.kind in "fc" or b.dtype.kind in "fc":
-            assert np.allclose(
-                a.to_numpy(dtype=float), b.to_numpy(dtype=float),
-                rtol=1e-9, atol=1e-9, equal_nan=True,
-            ), f"column {c} diverges at full grid"
-        else:
-            assert (a.fillna("∅").astype(str) == b.fillna("∅").astype(str)).all(), c
 
 
-def test_arrow_backend_matches_pandas_backend(
+def test_fused_matches_composable_non_utc_session(
     spark, tiny_df, side_profile_df, side_config_df
 ):
-    """The mapInArrow backend (strings never box into Python) must be
-    VALUE-identical to the original mapInPandas formulation — floats
-    bit-equal via repr, strings/nulls equal."""
-    kw = dict(
-        side_profile=side_profile_df, side_config=side_config_df,
-        lags=(1,), levels=(4,),
+    """Under a non-UTC session the fused plan still compares every
+    timestamp as UTC epoch microseconds, like the composable pipeline
+    (time-of-day features and both as-of lookups included)."""
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "Asia/Kolkata")
+    try:
+        _assert_matches_composable(tiny_df, side_profile_df, side_config_df)
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_fused_null_conv_id(spark, tiny_pdf, side_profile_df, side_config_df):
+    """Null conv_id rows form one conversation, as in the composable
+    pipeline's partitionBy — including a partition that holds nothing
+    else, where the carry split meets a null last id."""
+    pdf = tiny_pdf.copy()
+    first = pdf["conv_id"].iloc[0]
+    pdf["conv_id"] = pdf["conv_id"].where(pdf["conv_id"] != first, None)
+    df = spark.createDataFrame(pdf).filter("conv_id IS NULL")
+    _assert_matches_composable(
+        df, side_profile_df, side_config_df, num_partitions=1
     )
-    arrow = _sorted(
-        build_features_fused(tiny_df, backend="arrow", **kw).toPandas()
-    )
-    pandas = _sorted(
-        build_features_fused(tiny_df, backend="pandas", **kw).toPandas()
-    )
-    assert list(arrow.columns) == list(pandas.columns)
-    for c in arrow.columns:
-        a, b = arrow[c], pandas[c]
-        if a.dtype.kind in "fc":
-            # repr equality = bit equality incl. NaN placement — the
-            # backends must not even differ in last-bit float noise
-            assert (
-                a.astype(float).astype(str) == b.astype(float).astype(str)
-            ).all(), c
-        else:
-            assert (a.fillna("∅").astype(str) == b.fillna("∅").astype(str)).all(), c

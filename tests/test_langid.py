@@ -1,6 +1,7 @@
 """Character-bigram language ID (operators/langid.py): planted
-multilingual fixture accuracy, arrow/expr backend bit-parity, and
-DuckDB-oracle parity (the lang_id gate query's contract)."""
+multilingual fixture accuracy and DuckDB-oracle parity of both the
+batch scorer and the Spark operator (the lang_id gate query's
+contract)."""
 
 import duckdb
 import numpy as np
@@ -98,19 +99,39 @@ def test_holdout_prose_accuracy():
     assert report["overall"] >= 0.9, report
 
 
-def test_backends_bit_identical(spark):
+def test_spark_scores_match_duckdb_oracle(spark):
+    """The Spark scorer and the DuckDB oracle (the lang_id gate query's
+    SQL) agree on the planted corpus: the same prediction on every row,
+    null text included, and the same integer margin and gram count on
+    every row with text (the oracle scores a null text as one unseen
+    bigram, so its margin there is not 0)."""
     pdf = _planted_corpus(n_per_lang=40, seed=31)
+    pdf = pd.concat(
+        [pdf, pd.DataFrame({"doc_id": [9999], "lang": ["unknown"],
+                            "text": [None]})],
+        ignore_index=True,
+    )
     df = spark.createDataFrame(pdf[["doc_id", "text"]])
-    cols = ["doc_id", "lang_pred", "lang_margin", "lang_grams"]
-    a = (
-        with_lang_scores(df, backend="arrow")
-        .select(cols).toPandas().sort_values("doc_id").reset_index(drop=True)
+    got = (
+        with_lang_scores(df)
+        .select("doc_id", "lang_pred", "lang_margin", "lang_grams")
+        .toPandas().sort_values("doc_id").reset_index(drop=True)
     )
-    e = (
-        with_lang_scores(df, backend="expr")
-        .select(cols).toPandas().sort_values("doc_id").reset_index(drop=True)
+    con = duckdb.connect()
+    con.register("documents", pdf[["doc_id", "text"]])
+    want = (
+        con.execute(oracle_fragments()).df()
+        .sort_values("doc_id").reset_index(drop=True)
     )
-    pd.testing.assert_frame_equal(a, e)
+    assert got["doc_id"].tolist() == want["doc_id"].tolist()
+    assert (got["lang_pred"] == want["lang_pred"]).all()
+    has_text = pdf.sort_values("doc_id")["text"].notna().to_numpy()
+    got, want = got[has_text], want[has_text]
+    assert (
+        got["lang_margin"].astype("int64")
+        == want["lang_margin"].astype("int64")
+    ).all()
+    assert (got["lang_grams"].astype("int64") == want["n"].astype("int64")).all()
 
 
 def test_oracle_parity_with_nulls():
@@ -159,6 +180,6 @@ def test_with_lang_id_compat_surface(spark):
 
 def test_unknown_rule_is_deterministic():
     """Short / empty / null inputs take the unknown path, never a
-    language, in every backend representation."""
+    language."""
     res = _score_batch(pd.Series([None, "", " ", "ab", "12 34 !?"]))
     assert (res["lang_pred"] == "unknown").all()

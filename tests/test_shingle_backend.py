@@ -1,14 +1,24 @@
-"""Arrow shingle-postings backend == interpreted-HOF backend, posting
-for posting (VERDICT r7 ask #3: mirror the MinHash arrow/hof pattern
-for the n-gram ops)."""
+"""Arrow shingle postings == the interpreted higher-order expression
+they replaced, posting for posting. The expression lives here as the
+reference; the n-gram operators run only the Arrow pass."""
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
+from nuclei_feature_extraction_spark.operators import dedup
 from nuclei_feature_extraction_spark.operators.dedup import (
     _shingle_postings,
+    _word_shingles,
     ngram_contamination,
 )
+
+
+def _hof_postings(df, id_col="doc_id", text_col="text", shingle=3):
+    """Reference (id, s) postings: distinct shingles built by the
+    interpreted ``transform(sequence(...), i -> concat_ws(...))``."""
+    sh = F.explode(F.array_distinct(_word_shingles(text_col, shingle)))
+    return df.select(F.col(id_col), sh.alias("s"))
 
 
 @pytest.fixture(scope="module")
@@ -40,50 +50,32 @@ def _canon(pdf: pd.DataFrame) -> pd.DataFrame:
 
 
 @pytest.mark.parametrize("shingle", [2, 3, 5])
-def test_postings_identical_across_backends(spark, docs, shingle):
-    arrow = _canon(
-        _shingle_postings(docs, shingle=shingle, backend="arrow").toPandas()
-    )
-    hof = _canon(
-        _shingle_postings(docs, shingle=shingle, backend="hof").toPandas()
-    )
+def test_postings_match_hof_reference(spark, docs, shingle):
+    arrow = _canon(_shingle_postings(docs, shingle=shingle).toPandas())
+    hof = _canon(_hof_postings(docs, shingle=shingle).toPandas())
     pd.testing.assert_frame_equal(arrow, hof)
 
 
-def test_contamination_identical_across_backends(spark, docs):
+def _contamination_vs_reference(corpus, bench, monkeypatch):
+    got = ngram_contamination(corpus, bench).toPandas()
+    monkeypatch.setattr(dedup, "_shingle_postings", _hof_postings)
+    want = ngram_contamination(corpus, bench).toPandas()
+    got = got.sort_values("doc_id").reset_index(drop=True)
+    want = want.sort_values("doc_id").reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, want)
+
+
+def test_contamination_matches_hof_reference(spark, docs, monkeypatch):
     bench = docs.filter("doc_id % 4 = 0")
     corpus = docs.filter("doc_id % 4 != 0")
-    a = ngram_contamination(corpus, bench, backend="arrow").toPandas()
-    h = ngram_contamination(corpus, bench, backend="hof").toPandas()
-    a = a.sort_values("doc_id").reset_index(drop=True)
-    h = h.sort_values("doc_id").reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, h)
+    _contamination_vs_reference(corpus, bench, monkeypatch)
 
 
-def test_verify_identical_across_backends(spark, docs):
-    from nuclei_feature_extraction_spark.operators.dedup import (
-        ngram_jaccard_verify,
-    )
-
-    pairs = spark.createDataFrame(
-        [(0, 7), (0, 1), (4, 6), (2, 5)], "id_a long, id_b long"
-    )
-    h = ngram_jaccard_verify(docs, pairs, backend="hof").toPandas()
-    a = ngram_jaccard_verify(docs, pairs, backend="arrow").toPandas()
-    h = h.sort_values(["id_a", "id_b"]).reset_index(drop=True)
-    a = a.sort_values(["id_a", "id_b"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, h)
-
-
-def test_contamination_benchmark_without_id_col(spark, docs):
+def test_contamination_benchmark_without_id_col(spark, docs, monkeypatch):
     # curation benchmark tables carry their own id name (bench_id) or
     # none — contamination must only read the benchmark's TEXT
     bench = docs.filter("doc_id % 4 = 0").selectExpr(
         "doc_id AS bench_id", "text"
     )
     corpus = docs.filter("doc_id % 4 != 0")
-    a = ngram_contamination(corpus, bench, backend="arrow").toPandas()
-    h = ngram_contamination(corpus, bench, backend="hof").toPandas()
-    a = a.sort_values("doc_id").reset_index(drop=True)
-    h = h.sort_values("doc_id").reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, h)
+    _contamination_vs_reference(corpus, bench, monkeypatch)

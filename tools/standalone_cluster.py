@@ -101,13 +101,14 @@ def launch_cluster(log_dir: str) -> list[subprocess.Popen]:
 
 
 def ensure_zip() -> str:
-    """Build (if needed) and return the --py-files package zip."""
+    """Build and return the --py-files package zip. Always rebuilt from
+    the source tree: a zip left by an older checkout ships stale
+    modules."""
     zip_path = os.path.join(REPO, "dist", "nfx.zip")
-    if not os.path.exists(zip_path):
-        subprocess.run(
-            [sys.executable, os.path.join(REPO, "tools", "package.py")],
-            check=True, cwd=REPO,
-        )
+    subprocess.run(
+        [sys.executable, os.path.join(REPO, "tools", "package.py")],
+        check=True, cwd=REPO,
+    )
     return zip_path
 
 
