@@ -50,6 +50,7 @@ from nuclei_feature_extraction_spark.functions.oracle import (
     XCOOC_STATS,
     discretize_log,
 )
+from nuclei_feature_extraction_spark.zipcache import guard_zip_caches
 
 ROLE_IDX = {"user": 0, "assistant": 1, "tool": 2, "system": 3}
 # Four ordered signals mirror the reference's four GLRLM directions
@@ -202,13 +203,17 @@ def _keyed_prefix_count_c(
 
 
 def _cumcount(conv: np.ndarray, key: np.ndarray) -> np.ndarray:
-    """1-based occurrence count of (conv, key) at each row (compiled
-    single-pass counter; pandas cumcount fallback — identical values)."""
+    """1-based occurrence count of (conv, key) at each row, as float64
+    (compiled single-pass counter; pandas cumcount fallback — identical
+    values and dtype)."""
     comb = _fuse_keys(conv, key)
     got = _keyed_prefix_count_c(comb, None, pre=False)
     if got is not None:
         return got
-    return pd.Series(comb).groupby(comb).cumcount().to_numpy() + 1
+    return (
+        pd.Series(comb).groupby(comb).cumcount().to_numpy(dtype=np.float64)
+        + 1.0
+    )
 
 
 def _net_count_before(
@@ -252,7 +257,7 @@ def cooc_prefix(
         lo, hi = np.minimum(i, j), np.maximum(i, j)
         pairkey = np.where(valid, lo * k + hi, -1)
         diag = (i == j) & valid
-        u = _cumcount(conv, pairkey).astype(np.float64)
+        u = _cumcount(conv, pairkey)
         dc2 = np.where(diag, 4.0, 2.0) * (2 * u - 1)
         dclogc = np.where(
             diag,
@@ -261,14 +266,14 @@ def cooc_prefix(
         )
         # sum-marginal entropy via (i+j) occurrence counts (s(k) = 2u)
         sumkey = np.where(valid, i + j, -1)
-        us = _cumcount(conv, sumkey).astype(np.float64)
+        us = _cumcount(conv, sumkey)
         dslogs = _xlogx(2 * us) - _xlogx(2 * us - 2)
         # marginal entropy HX via the interleaved (i, j) event stream
         ev_conv = np.repeat(conv, 2)
         ev_val = np.empty(2 * n, dtype=np.int64)
         ev_val[0::2] = np.where(valid, i, -1)
         ev_val[1::2] = np.where(valid, j, -1)
-        m = _cumcount(ev_conv, ev_val).astype(np.float64)
+        m = _cumcount(ev_conv, ev_val)
         dm = _xlogx(m) - _xlogx(m - 1)
         row_dm = np.where(valid, dm[0::2] + dm[1::2], 0.0)
 
@@ -351,9 +356,9 @@ def xcooc_prefix(
 
     with np.errstate(divide="ignore", invalid="ignore"):
         pairkey = np.where(valid, i * kb + j, -1)
-        u = _cumcount(conv, pairkey).astype(np.float64)
-        ua = _cumcount(conv, np.where(valid, i, -1)).astype(np.float64)
-        ub = _cumcount(conv, np.where(valid, j, -1)).astype(np.float64)
+        u = _cumcount(conv, pairkey)
+        ua = _cumcount(conv, np.where(valid, i, -1))
+        ub = _cumcount(conv, np.where(valid, j, -1))
         fi, fj = i.astype(np.float64), j.astype(np.float64)
         zero = np.zeros(n)
         (
@@ -425,7 +430,7 @@ def runlen_prefix(
         short_d = np.where(pos > 0, 1.0 / length**2 - 1.0 / (length - 1) ** 2, 1.0)
         long_d = 2 * length - 1  # l² − (l−1)² (and g(1) = 1 at pos 0)
         startkey = np.where(chg, x, -1)
-        rv = _cumcount(conv, startkey).astype(np.float64)
+        rv = _cumcount(conv, startkey)
         xl = x.astype(np.float64)
         low = 1.0 / (xl + 1) ** 2
         high = (xl + 1) ** 2
@@ -1234,6 +1239,7 @@ def prefix_features(
     )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        guard_zip_caches()
         carry: pd.DataFrame | None = None
         for pdf in batches:
             if carry is not None and len(carry):

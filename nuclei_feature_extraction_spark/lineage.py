@@ -117,25 +117,34 @@ def executor_stage_totals(spark) -> dict:
         jvm.java.util.ArrayList(), False, False,
         gw.new_array(jvm.double, 0), jvm.java.util.ArrayList(),
     )
+    # one JSON string for the whole list (the REST API's own Jackson +
+    # Scala module), not ~13 py4j round trips per stage: 0.20-0.33 s
+    # vs 0.88 s at 1,000 retained stages (local[2], 4-core VM). The
+    # Scala module is reached as its MODULE$ singleton; py4j does not
+    # resolve the plain class name.
+    mapper = jvm.com.fasterxml.jackson.databind.ObjectMapper()
+    mapper.registerModule(getattr(
+        getattr(jvm.com.fasterxml.jackson.module.scala, "DefaultScalaModule$"),
+        "MODULE$",
+    ))
     tot = dict.fromkeys(_STAGE_TOTAL_KEYS, 0.0)
-    for i in range(lst.size()):
-        st = lst.apply(i)
-        tot["core_seconds"] += st.executorRunTime() / 1e3
-        tot["cpu_seconds"] += st.executorCpuTime() / 1e9
-        tot["shuffle_read_mb"] += st.shuffleReadBytes() / 1e6
-        tot["shuffle_write_mb"] += st.shuffleWriteBytes() / 1e6
+    for st in json.loads(mapper.writeValueAsString(lst)):
+        tot["core_seconds"] += st["executorRunTime"] / 1e3
+        tot["cpu_seconds"] += st["executorCpuTime"] / 1e9
+        tot["shuffle_read_mb"] += st["shuffleReadBytes"] / 1e6
+        tot["shuffle_write_mb"] += st["shuffleWriteBytes"] / 1e6
         # shuffle I/O + overhead TIME terms (the standalone-vs-local
         # overhead decomposition): fetch wait + write are real I/O
         # stalls, deserialize + GC are per-task JVM overhead
-        tot["fetch_wait_seconds"] += st.shuffleFetchWaitTime() / 1e3
-        tot["shuffle_write_seconds"] += st.shuffleWriteTime() / 1e9
-        tot["deserialize_seconds"] += st.executorDeserializeTime() / 1e3
-        tot["gc_seconds"] += st.jvmGcTime() / 1e3
+        tot["fetch_wait_seconds"] += st["shuffleFetchWaitTime"] / 1e3
+        tot["shuffle_write_seconds"] += st["shuffleWriteTime"] / 1e9
+        tot["deserialize_seconds"] += st["executorDeserializeTime"] / 1e3
+        tot["gc_seconds"] += st["jvmGcTime"] / 1e3
         tot["spill_mb"] += (
-            st.memoryBytesSpilled() + st.diskBytesSpilled()
+            st["memoryBytesSpilled"] + st["diskBytesSpilled"]
         ) / 1e6
-        tot["tasks"] += st.numCompleteTasks()
-        tot["failed_tasks"] += st.numFailedTasks()
+        tot["tasks"] += st["numCompleteTasks"]
+        tot["failed_tasks"] += st["numFailedTasks"]
         tot["stages"] += 1
     return {k: round(v, 3) for k, v in tot.items()}
 

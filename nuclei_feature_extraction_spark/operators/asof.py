@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from nuclei_feature_extraction_spark.functions.timeutil import epoch_seconds
+from nuclei_feature_extraction_spark.zipcache import guard_zip_caches
 
 _TS = "__asof_ts"
 _SRC = "__asof_src"
@@ -175,6 +176,7 @@ def asof_join_broadcast(
 
     @F.pandas_udf(returnType=struct)
     def _match(ts: pd.Series) -> pd.DataFrame:
+        guard_zip_caches()
         t = ts.to_numpy(dtype="datetime64[ns]").astype(np.int64)
         idx = np.searchsorted(rts, t, side="right") - 1
         ok = idx >= 0
@@ -281,6 +283,7 @@ def asof_join_cogrouped(
     tol = None if tolerance_seconds is None else pd.Timedelta(seconds=tolerance_seconds)
 
     def merge(lg: pd.DataFrame, rg: pd.DataFrame) -> pd.DataFrame:
+        guard_zip_caches()
         lg = lg.sort_values(left_ts, kind="mergesort")
         if rg.empty:
             out = lg.copy()

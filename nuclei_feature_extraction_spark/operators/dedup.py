@@ -37,6 +37,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from nuclei_feature_extraction_spark.zipcache import guard_zip_caches
+
 # second-hash domain separator for the composite exact-dedup key
 _H2_SALT = "nfx:dedup:h2"
 
@@ -132,6 +134,7 @@ def _shingle_postings(
     def gen(batches):
         import pyarrow as pa
 
+        guard_zip_caches()
         for b in batches:
             tbl = pa.Table.from_batches([b]).combine_chunks()
             if tbl.num_rows == 0:
@@ -313,6 +316,7 @@ def minhash_signature(
         return (x << np.uint64(k)) | (x >> np.uint64(64 - k))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        guard_zip_caches()
         for pdf in batches:
             n = len(pdf)
             arrs = pdf["__hs"].to_numpy()
@@ -441,6 +445,7 @@ def _capped_bucket_pairs(
         )
 
         def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            guard_zip_caches()
             bufs_a: list = []
             bufs_b: list = []
             acc = 0
@@ -825,7 +830,19 @@ def ngram_jaccard_verify(
     not the postings ops' Arrow pass: the verify input is the
     CAP-BOUNDED candidate set, and at bench-scale candidate volumes an
     Arrow pass's extra Python round-trip cost more than the expression
-    (measured interleaved: 2.81/2.62 vs 2.44/2.59 s)."""
+    (measured interleaved: 2.81/2.62 vs 2.44/2.59 s).
+
+    ``pairs`` must be deterministic: its plan must give the same rows
+    each time it runs. It is checkpointed LAZILY, so each partition is
+    stored only when a job first computes it, and until the checkpoint
+    completes, a partition that is lost or not yet stored is computed
+    again from the upstream plan. The ids union and the final pair
+    join read it in different stages; with a non-deterministic upstream
+    (``rand()``, sampling, a ``limit``, an order-dependent pick after a
+    shuffle) a recomputation can hand them different candidate sets,
+    and a pair whose docs were never shingled drops out of the result
+    silently. An eager checkpoint would pin one evaluation at the cost
+    of a synchronous job."""
     # the candidate frame feeds THREE plan branches (both arms of the
     # ids union + the final pair join); an expensive upstream (the LSH
     # bucket self-join) would execute three times — checkpoint the tiny

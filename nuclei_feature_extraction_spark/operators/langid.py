@@ -36,6 +36,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from nuclei_feature_extraction_spark.zipcache import guard_zip_caches
+
 LANGS = ("en", "de", "es", "fr", "it", "pt")
 MIN_GRAMS = 4           # fewer bigrams than this -> 'unknown'
 MARGIN_MILLI = 15       # required milli-nats of margin PER GRAM
@@ -311,6 +313,7 @@ def _score_batch(texts) -> "object":
 def _arrow_lang_col(text_col: str) -> Column:
     @F.pandas_udf(_LID_SCHEMA)
     def lid(texts):  # pragma: no cover - executed on workers
+        guard_zip_caches()
         return _score_batch(texts)
 
     return lid(F.col(text_col))

@@ -16,6 +16,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from nuclei_feature_extraction_spark.zipcache import guard_zip_caches
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -208,6 +210,7 @@ def ivf_assign(
 
     @F.pandas_udf(returnType=T.IntegerType())
     def assign(v: pd.Series) -> pd.Series:
+        guard_zip_caches()
         m = np.stack(v.to_numpy()).astype(np.float64)
         norms = np.linalg.norm(m, axis=1, keepdims=True)
         m = m / np.where(norms > 0, norms, 1.0)
@@ -255,6 +258,7 @@ def ivf_probe_cells(
 
     @F.pandas_udf(returnType=T.ArrayType(T.IntegerType()))
     def probes(v: pd.Series) -> pd.Series:
+        guard_zip_caches()
         m = np.stack(v.to_numpy()).astype(np.float64)
         norms = np.linalg.norm(m, axis=1, keepdims=True)
         m = m / np.where(norms > 0, norms, 1.0)
@@ -293,6 +297,7 @@ def kmeans_refine(
         assigned = ivf_assign(df, centroids, vec_col).select(vec_col, "ivf_cell")
 
         def partials(batches):
+            guard_zip_caches()
             sums = np.zeros((k, d))
             cnts = np.zeros(k)
             seen = False
@@ -462,6 +467,7 @@ def cosine_all_pairs_exact(
     thr = float(threshold)
 
     def block_pair(pdf: pd.DataFrame) -> pd.DataFrame:
+        guard_zip_caches()
         empty = pd.DataFrame({"id_a": [], "id_b": [], "sim": []})
         bi, bj = int(pdf["bi"].iloc[0]), int(pdf["bj"].iloc[0])
         ia = pdf.loc[pdf["__blk"] == bi, "__id"].to_numpy()

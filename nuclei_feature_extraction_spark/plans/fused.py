@@ -44,6 +44,7 @@ from nuclei_feature_extraction_spark.functions.kernels import (
     _seg_cumsum,
     _seg_pos,
 )
+from nuclei_feature_extraction_spark.zipcache import guard_zip_caches
 
 TWO_PI = 2.0 * 3.141592653589793
 
@@ -413,13 +414,18 @@ def build_features_fused(
         # a dict of 10^5+ conversations costs seconds of driver-side
         # Python to build and pickles as 10^5 objects; four numpy arrays
         # build in ~ms and broadcast as buffers. Sort by (conv, ts, plan)
-        # keeps within-conv ts order and the greatest-plan tie-break.
-        ppd = _with_epoch_us(side_profile).toPandas().sort_values(
-            ["conv_id", "effective_ts", "plan"], kind="mergesort"
+        # keeps within-conv ts order and the greatest-plan tie-break;
+        # null-conv rows go first, as a block of their own.
+        ppd = _with_epoch_us(side_profile).toPandas()
+        ppd["__valid"] = ppd["conv_id"].notna()
+        ppd = ppd.sort_values(
+            ["__valid", "conv_id", "effective_ts", "plan"], kind="mergesort"
         )
+        n_null = len(ppd) - int(ppd["__valid"].sum())
         plan_codes, plan_cats = pd.factorize(ppd["plan"], sort=False)
         profile_arrays = (
-            ppd["conv_id"].to_numpy(dtype="U"),
+            ppd["conv_id"].iloc[n_null:].to_numpy(dtype="U"),
+            n_null,
             ppd["effective_ts"].to_numpy(dtype=np.int64),
             plan_codes.astype(np.int64),
             np.asarray(plan_cats, dtype=object),
@@ -493,6 +499,7 @@ def build_features_fused(
         objects; string outputs (role lags, side picks) are built as
         dictionary codes and decoded C-side. A conversation that runs
         past a batch boundary is carried into the next batch whole."""
+        guard_zip_caches()
         import time as _time
 
         import pyarrow as pa
@@ -558,7 +565,7 @@ def build_features_fused(
             del win  # setitem copied its columns: free the block now
             ts_us = out["ts"].to_numpy(dtype="datetime64[us]").astype(np.int64)
             if prof is not None:
-                pconv, prts, ppl_codes, ppl_cats, psc = prof
+                pconv, n_null, prts, ppl_codes, ppl_cats, psc = prof
                 # per-CONVERSATION string searches (one per conv, repeated
                 # to rows), then one fully VECTORIZED bounded binary
                 # search for the rightmost side row with rts ≤ ts inside
@@ -573,11 +580,20 @@ def build_features_fused(
                 # natural-width str, NOT pconv.dtype: casting to the
                 # profile's fixed '<U' width would truncate longer
                 # out-of-profile ids to a prefix that can falsely match
-                cids = np.asarray(
-                    col["conv_id"].take(pa.array(starts)).to_pylist(), dtype=str
+                sel = col["conv_id"].take(pa.array(starts))
+                cids = np.asarray(sel.fill_null("").to_pylist(), dtype=str)
+                # a null id owns the profile's leading null-conv block,
+                # like the composable as-of's partitionBy; str(None) =
+                # 'None' would match a profile row keyed "None"
+                valid = sel.is_valid().to_numpy(zero_copy_only=False)
+                blo = np.where(
+                    valid, np.searchsorted(pconv, cids, side="left") + n_null, 0
                 )
-                blo = np.repeat(np.searchsorted(pconv, cids, side="left"), counts)
-                bhi = np.repeat(np.searchsorted(pconv, cids, side="right"), counts)
+                bhi = np.where(
+                    valid, np.searchsorted(pconv, cids, side="right") + n_null,
+                    n_null,
+                )
+                blo, bhi = np.repeat(blo, counts), np.repeat(bhi, counts)
                 lo, hi = blo.copy(), bhi.copy()
                 while True:
                     active = lo < hi

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from nuclei_feature_extraction_spark.zipcache import guard_zip_caches
+
 TRANSCRIPT_SCHEMA = T.StructType(
     [
         T.StructField("conv_id", T.StringType(), False),
@@ -95,6 +97,7 @@ def _write_arrow_ipc(df: DataFrame, path: str, overwrite: bool) -> None:
     arrow_schema_json = df.schema.json()
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        guard_zip_caches()
         import pyarrow as pa
         from pyspark import TaskContext
         from pyspark.sql.types import StructType, _parse_datatype_json_string

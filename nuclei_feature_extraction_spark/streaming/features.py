@@ -40,6 +40,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from nuclei_feature_extraction_spark.functions.kernels import ROLE_IDX
 from nuclei_feature_extraction_spark.functions.oracle import discretize_log
+from nuclei_feature_extraction_spark.zipcache import guard_zip_caches
 
 K = 4
 KA = 5  # role levels (4 named + other)
@@ -678,6 +679,7 @@ def streaming_prefix_features(
         )
 
     def fn(key, pdfs, state):
+        guard_zip_caches()
         return _update(key, pdfs, state, late_policy, state_metrics)
 
     src = stream.select(

@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from nuclei_feature_extraction_spark.zipcache import guard_zip_caches
+
 OUT_SCHEMA = (
     "conv_id string, turn_idx int, ts timestamp, session_id int, "
     "turns_so_far long, gap_s double"
@@ -73,6 +75,7 @@ def streaming_turn_state(
     ``session_id`` / ``turns_so_far`` / ``gap_s``."""
 
     def fn(key, pdfs, state):
+        guard_zip_caches()
         return _update(key, pdfs, state, gap_minutes)
 
     return (

@@ -31,6 +31,7 @@ from nuclei_feature_extraction_spark.plans.fused import (
     WINDOW_FEATURE_COLS,
     _window_features_pdf,
 )
+from nuclei_feature_extraction_spark.zipcache import guard_zip_caches
 
 TAIL = 64  # longest lookback (the w=64 bank window)
 
@@ -237,6 +238,7 @@ def streaming_window_features(
         )
 
     def fn(key, pdfs, state):
+        guard_zip_caches()
         return _update(key, pdfs, state, gap_minutes, late_policy,
                        state_metrics)
 

@@ -7,6 +7,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from nuclei_feature_extraction_spark.lineage import (
+    _STAGE_TOTAL_KEYS,
+    executor_stage_totals,
     partition_metrics,
     run_with_metrics,
 )
@@ -130,6 +132,42 @@ def test_bucket_cap_drops_surface_in_run_metrics(spark, tmp_path):
     with open(path) as fh:
         on_disk = json.load(fh)
     assert on_disk["audits"]["n_dropped_members"] > 0
+
+
+def _stage_totals_per_stage_calls(spark) -> dict:
+    """Reference: the same totals read with py4j calls per stage."""
+    sc = spark.sparkContext
+    jvm, gw = sc._jvm, sc._gateway
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    lst = sc._jsc.sc().statusStore().stageList(
+        jvm.java.util.ArrayList(), False, False,
+        gw.new_array(jvm.double, 0), jvm.java.util.ArrayList(),
+    )
+    tot = dict.fromkeys(_STAGE_TOTAL_KEYS, 0.0)
+    for i in range(lst.size()):
+        st = lst.apply(i)
+        tot["core_seconds"] += st.executorRunTime() / 1e3
+        tot["cpu_seconds"] += st.executorCpuTime() / 1e9
+        tot["shuffle_read_mb"] += st.shuffleReadBytes() / 1e6
+        tot["shuffle_write_mb"] += st.shuffleWriteBytes() / 1e6
+        tot["fetch_wait_seconds"] += st.shuffleFetchWaitTime() / 1e3
+        tot["shuffle_write_seconds"] += st.shuffleWriteTime() / 1e9
+        tot["deserialize_seconds"] += st.executorDeserializeTime() / 1e3
+        tot["gc_seconds"] += st.jvmGcTime() / 1e3
+        tot["spill_mb"] += (
+            st.memoryBytesSpilled() + st.diskBytesSpilled()
+        ) / 1e6
+        tot["tasks"] += st.numCompleteTasks()
+        tot["failed_tasks"] += st.numFailedTasks()
+        tot["stages"] += 1
+    return {k: round(v, 3) for k, v in tot.items()}
+
+
+def test_executor_stage_totals_match_per_stage_calls(spark, tiny_df):
+    tiny_df.groupBy("role").count().collect()
+    got = executor_stage_totals(spark)
+    assert got == _stage_totals_per_stage_calls(spark)
+    assert got["stages"] >= 1 and got["tasks"] >= 1
 
 
 def test_partition_metrics(spark, tiny_df):

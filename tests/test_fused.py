@@ -134,14 +134,31 @@ def test_fused_matches_composable_non_utc_session(
         spark.conf.set(key, old)
 
 
-def test_fused_null_conv_id(spark, tiny_pdf, side_profile_df, side_config_df):
+def test_fused_null_conv_id(spark, tiny_pdf, side_profile_pdf, side_config_df):
     """Null conv_id rows form one conversation, as in the composable
     pipeline's partitionBy — including a partition that holds nothing
-    else, where the carry split meets a null last id."""
+    else, where the carry split meets a null last id. They match no
+    profile row keyed by the string "None", and only the profile's
+    null-keyed rows, as in the composable as-of."""
     pdf = tiny_pdf.copy()
     first = pdf["conv_id"].iloc[0]
     pdf["conv_id"] = pdf["conv_id"].where(pdf["conv_id"] != first, None)
     df = spark.createDataFrame(pdf).filter("conv_id IS NULL")
-    _assert_matches_composable(
-        df, side_profile_df, side_config_df, num_partitions=1
+    t0 = pdf.loc[pdf["conv_id"].isna(), "ts"].min()
+    keyed = side_profile_pdf.iloc[:1].assign(effective_ts=t0)
+    profile = pd.concat(
+        [side_profile_pdf, keyed.assign(conv_id="None", plan="none-str")],
+        ignore_index=True,
     )
+    fused = _assert_matches_composable(
+        df, spark.createDataFrame(profile), side_config_df, num_partitions=1
+    )
+    assert fused["plan"].isna().all(), fused["plan"].value_counts()
+    profile = pd.concat(
+        [profile, keyed.assign(conv_id=None, plan="null-key")],
+        ignore_index=True,
+    )
+    fused = _assert_matches_composable(
+        df, spark.createDataFrame(profile), side_config_df, num_partitions=1
+    )
+    assert (fused["plan"] == "null-key").all(), fused["plan"].value_counts()

@@ -87,3 +87,23 @@ def test_keyed_prefix_count_matches_pandas():
     got = _keyed_prefix_count_c(comb, sign, pre=True)
     cs = pd.Series(sign).groupby(comb).cumsum().to_numpy()
     assert np.array_equal(got, (cs - sign).astype(np.float64))
+
+
+def test_cumcount_fallback_matches_compiled(monkeypatch):
+    """Without the compiled counter, ``_cumcount`` falls back to pandas
+    and still returns the same float64 values."""
+    from nuclei_feature_extraction_spark.functions import kernels
+
+    rng = np.random.default_rng(5)
+    conv = np.sort(rng.integers(0, 6, size=3000))
+    key = rng.integers(-1, 9, size=3000)
+    comb = kernels._fuse_keys(conv, key)
+    want = np.empty(len(comb))
+    seen: dict = {}
+    for r, c in enumerate(comb.tolist()):
+        seen[c] = seen.get(c, 0) + 1
+        want[r] = seen[c]
+    monkeypatch.setattr(kernels, "_keyed_prefix_count_c", lambda *a, **k: None)
+    got = kernels._cumcount(conv, key)
+    assert got.dtype == np.float64
+    assert np.array_equal(got, want)
