@@ -41,7 +41,7 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
                    help="registry names/aliases (plans/registry.py); "
                    "invalid names fail before execution, like args.rs:137-183")
     p.add_argument("--plan", choices=["composable", "fused"], default="composable",
-                   help="fused = the single-shuffle mapInPandas plan "
+                   help="fused = the single-shuffle mapInArrow plan "
                    "(full feature set only; wide rows never cross an "
                    "exchange — the 100 TB hot path)")
     p.add_argument("--cooc-lags", nargs="+", type=int, default=[1, 2])

@@ -20,10 +20,16 @@ across ALL conversations in an Arrow batch (no per-row or per-group
 Python). The naive oracles in oracle.py define the semantics; tests
 assert allclose between the two.
 
-Spark integration: ``prefix_features`` repartitions by conversation,
-sorts within partitions, and streams Arrow batches through
-``mapInPandas`` with a carry buffer so conversations split across
-batches are stitched — one shuffle, no group-at-a-time overhead.
+Every family is a plain numpy function: sorted arrays in (a
+:class:`Turns` — conversation codes, UTC epoch µs, role dictionary
+codes, has_tool, tlen), ``dict[str, np.ndarray]`` out.
+:func:`conversation_pass` is the one Arrow worker that runs them for
+both batch plans (``prefix_features`` here, ``build_features_fused``):
+one shuffle by conversation, a sort within partitions, one
+``mapInArrow`` whose carry loop (:func:`whole_conversations`) stitches
+conversations split across batches, input columns passed through
+zero-copy and outputs built straight from the arrays — no
+group-at-a-time overhead, no pandas frame per batch.
 
 Key incremental identities (c = cell count, u = occurrence count of the
 underlying key, f(x) = x·ln x):
@@ -38,10 +44,13 @@ underlying key, f(x) = x·ln x):
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator, Sequence
+from collections.abc import Callable, Iterable, Iterator, Sequence
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from nuclei_feature_extraction_spark.functions.oracle import (
     COOC_STATS,
@@ -134,22 +143,16 @@ def _seg_cumsum_block(cols: Sequence[np.ndarray], first: np.ndarray) -> list[np.
     measured). Same per-segment exactness guarantee as ``_seg_cumsum``
     (each segment sums independently, sequential left-to-right order —
     bit-identical to the pandas groupby path)."""
-    if _GROUP_CUMSUM is not None:
-        labels, ngroups = _seg_labels(first)
-        outs = []
-        for c in cols:
-            v = np.ascontiguousarray(c, dtype=np.float64).reshape(-1, 1)
-            out = np.empty_like(v)
-            _GROUP_CUMSUM(out, v, labels, ngroups, False, True)
-            outs.append(out.reshape(-1))
-        return outs
-    seg = np.cumsum(first)
-    n = len(first)
-    block = np.empty((n, len(cols)), dtype=np.float64, order="F")
-    for j, c in enumerate(cols):
-        block[:, j] = c
-    out = pd.DataFrame(block, copy=False).groupby(seg).cumsum().to_numpy()
-    return [np.ascontiguousarray(out[:, j]) for j in range(len(cols))]
+    if _GROUP_CUMSUM is None:
+        return [_seg_cumsum(c, first) for c in cols]
+    labels, ngroups = _seg_labels(first)
+    outs = []
+    for c in cols:
+        v = np.ascontiguousarray(c, dtype=np.float64).reshape(-1, 1)
+        out = np.empty_like(v)
+        _GROUP_CUMSUM(out, v, labels, ngroups, False, True)
+        outs.append(out.reshape(-1))
+    return outs
 
 
 def _seg_pos(first: np.ndarray) -> np.ndarray:
@@ -1027,7 +1030,27 @@ def _hull_prefix_py(
     return out_area, out_perim
 
 
-# ------------------------------------------------------- pandas assembly
+# ------------------------------------------------------ family assembly
+
+class Turns(NamedTuple):
+    """Whole conversations as flat arrays, sorted by (conversation, ts,
+    turn_idx): the input of every kernel and window family."""
+
+    conv: np.ndarray  # int64 conversation codes; null ids share one code
+    ts_us: np.ndarray  # int64 UTC epoch microseconds
+    role: np.ndarray  # int64 codes into ``roles``, -1 for null
+    roles: Sequence[str]  # the role dictionary
+    has_tool: np.ndarray | None  # int64 0/1 (kernel families only)
+    tlen: np.ndarray  # float64 text length
+
+
+def seg_first(conv: np.ndarray) -> np.ndarray:
+    """True at the first row of each conversation."""
+    first = np.empty(len(conv), dtype=bool)
+    first[:1] = True
+    first[1:] = conv[1:] != conv[:-1]
+    return first
+
 
 def feature_names(
     families: Sequence[str] = ("cooc", "runlen", "xcooc", "shape"),
@@ -1050,47 +1073,26 @@ def feature_names(
     return names
 
 
-def _role_idx_array(role: pd.Series) -> np.ndarray:
-    """role strings → ROLE_IDX ints (unknown → 4). For a Categorical
-    column (the fused Arrow backend) the lookup runs over the handful of
-    categories and takes by code — no per-row Python string ever
-    exists; value-identical to the map/fillna path."""
-    if isinstance(role.dtype, pd.CategoricalDtype):
-        cat = role.array
-        if len(cat.categories) == 0:  # all-null column: every row unknown
-            return np.full(len(cat), 4, dtype=np.int64)
-        lut = np.fromiter(
-            (ROLE_IDX.get(c, 4) for c in cat.categories),
-            count=len(cat.categories), dtype=np.int64,
-        )
-        codes = np.asarray(cat.codes, dtype=np.int64)
-        return np.where(codes >= 0, lut[np.maximum(codes, 0)], 4)
-    return role.map(ROLE_IDX).fillna(4).to_numpy(dtype=np.int64)
+def _role_idx(t: Turns) -> np.ndarray:
+    """Role codes → ROLE_IDX ints (null or unknown → 4), looked up over
+    the handful of dictionary entries, never per row."""
+    lut = np.array([ROLE_IDX.get(r, 4) for r in t.roles] + [4], dtype=np.int64)
+    return lut[t.role]  # code -1 picks the trailing 4
 
 
-def compute_features_pdf(
-    pdf: pd.DataFrame,
+def kernel_features(
+    t: Turns,
     families: Sequence[str] = ("cooc", "runlen", "xcooc", "shape"),
     lags: Sequence[int] = DEFAULT_LAGS,
     levels: Sequence[int] = DEFAULT_LEVELS,
-    conv_col: str = "conv_id",
-    order_cols: Sequence[str] = ("ts", "turn_idx"),
-    passthrough: bool = False,
-    assume_sorted: bool = False,
     timings: dict | None = None,
-) -> pd.DataFrame:
-    """Compute all requested families for a pandas chunk holding WHOLE
-    conversations. Returns (conv_id, turn_idx) + feature columns, or —
-    with ``passthrough`` — ALL input columns + features (row-aligned,
-    saving the downstream key join entirely).
+) -> dict[str, np.ndarray]:
+    """Every requested family over whole sorted conversations, one
+    float64 array per :func:`feature_names` column.
 
-    Shared intermediates (sort, conv codes, tlen levels) are computed
+    Shared intermediates (conversation starts, tlen levels) are computed
     once across families — the CSE the reference misses when it
     re-derives grayscale per kernel (texture.rs:36,189,332).
-    ``assume_sorted``: the Spark path repartitions + sortWithinPartitions
-    before the Arrow pass, so every chunk arrives already ordered — the
-    pandas lexsort re-pass (string keys, one take per column) is pure
-    overhead there.
     ``timings``: optional dict that receives per-family elapsed seconds
     (``{"cooc": s, ...}``, added to existing values) so callers can
     surface the family share per run instead of per-investigation.
@@ -1100,82 +1102,164 @@ def compute_features_pdf(
     def _mark(key: str, t0: float) -> None:
         if timings is not None:
             timings[key] = timings.get(key, 0.0) + (_time.perf_counter() - t0)
-    if not assume_sorted:
-        pdf = pdf.sort_values([conv_col, *order_cols], kind="mergesort")
-    conv, _ = pd.factorize(pdf[conv_col].to_numpy(), sort=False)
-    n = len(pdf)
-    first = np.empty(n, dtype=bool)
-    first[0] = True
-    first[1:] = conv[1:] != conv[:-1]
 
-    tlen = pdf["tlen"].to_numpy(dtype=np.float64)
-    # feature values go into ONE preallocated (n_feats, n) block wrapped
-    # as a DataFrame without consolidation — pandas' dict constructor
-    # spends ~70% of kernel wall re-stacking 87 float columns
-    names = feature_names(families, lags, levels)
-    slot = {nm: i for i, nm in enumerate(names)}
-    block = np.empty((len(names), n), dtype=np.float64)
+    conv, tlen = t.conv, t.tlen
+    first = seg_first(conv)
     out: dict[str, np.ndarray] = {}
     if "cooc" in families:
         _t = _time.perf_counter()
         for k in levels:
             xk = discretize_log(tlen, k)
             for d in lags:
-                stats = cooc_prefix(conv, first, xk, d, k)
-                for s, v in stats.items():
-                    block[slot[f"cooc_{s}_d{d}_k{k}"]] = v
+                for s, v in cooc_prefix(conv, first, xk, d, k).items():
+                    out[f"cooc_{s}_d{d}_k{k}"] = v
         _mark("cooc", _t)
+    if "runlen" in families or "xcooc" in families:
+        role = _role_idx(t)
+        tlen4 = discretize_log(tlen, 4)
     if "runlen" in families:
         _t = _time.perf_counter()
-        role = _role_idx_array(pdf["role"])
-        has_tool = pdf["tool"].notna().to_numpy().astype(np.int64)
-        tlen4 = discretize_log(tlen, 4)
         posb = np.minimum(_seg_pos(first) // 4, 3).astype(np.int64)
         for sig, arr in (
-            ("role", role), ("has_tool", has_tool),
+            ("role", role), ("has_tool", t.has_tool),
             ("tlen4", tlen4), ("posb", posb),
         ):
             stats = runlen_prefix(conv, first, arr, RUNLEN_N_LEVELS[sig])
             for s, v in stats.items():
-                block[slot[f"runlen_{s}_{sig}"]] = v
+                out[f"runlen_{s}_{sig}"] = v
         _mark("runlen", _t)
     if "xcooc" in families:
         _t = _time.perf_counter()
         # cross-signal direction: who spoke d turns ago × how long the
         # current turn is (role lag-d against the level-4 tlen stream)
-        role_x = _role_idx_array(pdf["role"])
-        tlen4_x = discretize_log(tlen, 4)
         for d in lags:
-            stats = xcooc_prefix(conv, first, role_x, tlen4_x, d)
-            for s, v in stats.items():
-                block[slot[f"xcooc_{s}_d{d}"]] = v
+            for s, v in xcooc_prefix(conv, first, role, tlen4, d).items():
+                out[f"xcooc_{s}_d{d}"] = v
         _mark("xcooc", _t)
     if "shape" in families:
         _t = _time.perf_counter()
-        ts_s = pdf["ts"].to_numpy(dtype="datetime64[ns]").astype(np.int64) / 1e9
-        t0 = ts_s[np.maximum.accumulate(np.where(first, np.arange(n), 0))]
-        stats = shape_prefix(conv, first, ts_s - t0, tlen)
-        for s, v in stats.items():
-            block[slot[f"shape_{s}"]] = v
+        ts_s = (t.ts_us * 1000) / 1e9
+        t0 = ts_s[np.maximum.accumulate(np.where(first, np.arange(len(conv)), 0))]
+        for s, v in shape_prefix(conv, first, ts_s - t0, tlen).items():
+            out[f"shape_{s}"] = v
         _mark("shape", _t)
+    return out
 
-    # assemble WITHOUT pd.concat: DataFrame(block.T) stores the (m, n)
-    # C-order block as ONE pandas block with zero copy, and per-column
-    # insert() adds passthrough columns as their own blocks. concat
-    # (axis=1) consolidates same-dtype blocks — measured 14.5 s/1M rows
-    # of pure memcpy on the bench box, ~60% of the whole kernel wall.
-    fdf = pd.DataFrame(block.T, columns=names, copy=False)
-    if passthrough:
-        for j, c in enumerate(pdf.columns):
-            # .values, not .to_numpy(): identical (zero-copy) for numpy-
-            # backed columns, but keeps a Categorical column (the fused
-            # Arrow backend's role) categorical instead of boxing every
-            # code into a Python string object
-            fdf.insert(j, c, pdf[c].values)
-    else:
-        fdf.insert(0, "turn_idx", pdf["turn_idx"].to_numpy())
-        fdf.insert(0, conv_col, pdf[conv_col].to_numpy())
-    return fdf
+
+# --------------------------------------------------------- arrow worker
+
+def turns_from_arrow(rb: pa.RecordBatch) -> Turns:
+    """The kernel inputs of a batch of whole sorted conversations.
+    ``conv_id`` and ``role`` dictionary-encode C-side, so no per-row
+    Python string is ever built; ``ts`` is read as the UTC epoch
+    microseconds the Arrow batch carries, whatever the session time
+    zone."""
+    cd = pc.dictionary_encode(rb.column("conv_id"))
+    rd = pc.dictionary_encode(rb.column("role"))
+    ts = rb.column("ts").to_numpy(zero_copy_only=False)
+    return Turns(
+        # null conv_ids share one code of their own: one conversation
+        conv=cd.indices.fill_null(len(cd.dictionary))
+        .to_numpy(zero_copy_only=False).astype(np.int64, copy=False),
+        ts_us=ts.astype("datetime64[us]", copy=False).view(np.int64),
+        role=rd.indices.fill_null(-1)
+        .to_numpy(zero_copy_only=False).astype(np.int64, copy=False),
+        roles=rd.dictionary.to_pylist(),
+        has_tool=rb.column("tool").is_valid()
+        .to_numpy(zero_copy_only=False).astype(np.int64),
+        tlen=rb.column("tlen").to_numpy(zero_copy_only=False),
+    )
+
+
+def _concat(parts: list[pa.RecordBatch]) -> pa.RecordBatch:
+    """One contiguous batch out of several: the carry loop's only copy."""
+    return pa.Table.from_batches(parts).combine_chunks().to_batches()[0]
+
+
+def whole_conversations(
+    batches: Iterable[pa.RecordBatch],
+) -> Iterator[pa.RecordBatch]:
+    """Regroup Arrow batches sorted by ``conv_id`` (nulls first, as
+    Spark sorts) so that every yielded batch holds whole conversations.
+
+    Each batch's last conversation may go on in the next batch, so it
+    is kept back as a zero-copy slice. The kept slices are joined ONCE,
+    when the conversation ends, so every input row is copied at most
+    once however many batches one conversation spans (re-joining the
+    carry on every batch is quadratic in the conversation length)."""
+    carry: list[pa.RecordBatch] = []  # slices of one unfinished conversation
+    carry_id = None
+    for b in batches:
+        if not b.num_rows:
+            continue
+        ids = b.column("conv_id")
+        last = ids[b.num_rows - 1].as_py()
+        # nulls sort first, so a null last id makes the whole batch the
+        # null conversation
+        n_tail = (
+            ids.null_count if last is None
+            else pc.sum(pc.equal(ids, last)).as_py()
+        )
+        cut = b.num_rows - n_tail
+        if carry and (cut or last != carry_id):
+            # b's head (possibly empty) finishes the carried conversation
+            parts = carry + ([b.slice(0, cut)] if cut else [])
+            yield parts[0] if len(parts) == 1 else _concat(parts)
+            carry = []
+        elif cut:
+            yield b.slice(0, cut)
+        carry.append(b.slice(cut))
+        carry_id = last
+    if carry:
+        yield carry[0] if len(carry) == 1 else _concat(carry)
+
+
+def decode(codes: np.ndarray, values: Sequence[str]) -> pa.Array:
+    """Dictionary codes (-1 = null) → a string array, decoded C-side."""
+    ind = pa.array(codes.astype(np.int32), mask=codes < 0)
+    return pa.DictionaryArray.from_arrays(
+        ind, pa.array(values, type=pa.string())
+    ).dictionary_decode()
+
+
+def _to_arrow(v) -> pa.Array:
+    if isinstance(v, pa.Array):
+        return v
+    if v.dtype.kind == "f":  # NaN → null, as pandas' from_pandas does
+        return pa.array(v, mask=np.isnan(v))
+    return pa.array(v)
+
+
+def conversation_pass(
+    prep, fields: Sequence, compute: Callable, num_partitions: int | None = None
+):
+    """The Arrow worker of both batch plans. Repartitions ``prep`` by
+    ``conv_id``, sorts each partition by (conv_id, ts, turn_idx) and
+    runs ONE ``mapInArrow`` over it: batches are regrouped into whole
+    conversations (:func:`whole_conversations`), and each regrouped
+    batch emits ``fields`` — a column ``compute(turns, batch)`` returns
+    (float NaN → null), else the input column of that name, zero-copy."""
+    from pyspark.sql import types as T
+
+    nparts = num_partitions or prep.sparkSession.sparkContext.defaultParallelism
+    prep = prep.repartition(nparts, "conv_id").sortWithinPartitions(
+        "conv_id", "ts", "turn_idx"
+    )
+    names = [f.name for f in fields]
+
+    def emit(rb: pa.RecordBatch) -> pa.RecordBatch:
+        out = compute(turns_from_arrow(rb), rb)
+        return pa.RecordBatch.from_arrays(
+            [_to_arrow(out[nm]) if nm in out else rb.column(nm) for nm in names],
+            names=names,
+        )
+
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        guard_zip_caches()
+        for rb in whole_conversations(batches):
+            yield emit(rb)
+
+    return prep.mapInArrow(gen, T.StructType(list(fields)))
 
 
 # ----------------------------------------------------------- spark layer
@@ -1185,82 +1269,37 @@ def prefix_features(
     families: Sequence[str] = ("cooc", "runlen", "xcooc", "shape"),
     lags: Sequence[int] = DEFAULT_LAGS,
     levels: Sequence[int] = DEFAULT_LEVELS,
-    conv_col: str = "conv_id",
-    order_cols: Sequence[str] = ("ts", "turn_idx"),
-    text_col: str = "text",
-    role_col: str = "role",
-    tool_col: str = "tool",
     num_partitions: int | None = None,
     passthrough: bool = False,
 ):
-    """Distributed prefix-feature pass: ONE shuffle (repartition by
-    conversation) + in-partition sort + ``mapInPandas`` with a carry
-    buffer stitching conversations that span Arrow batches.
+    """Distributed prefix-feature pass over a transcript table: ONE
+    shuffle (repartition by conversation) + in-partition sort + the
+    :func:`conversation_pass` Arrow worker, which stitches
+    conversations that span Arrow batches.
 
     Returns (conv_id, turn_idx, <features…>), or — with ``passthrough``
-    — every input column + features, row-aligned inside the kernel, so
-    the caller skips the (conv_id, turn_idx) sort-merge join entirely
-    (measured: the join costs more than the kernels themselves at
-    bench scale). Key-joined mode remains for composing with frames the
-    kernel didn't see (J2 analog — key-based, never order-based).
+    — every input column + ``tlen`` + features, row-aligned inside the
+    kernel, so the caller skips the (conv_id, turn_idx) sort-merge join
+    entirely (measured: the join costs more than the kernels themselves
+    at bench scale). Key-joined mode remains for composing with frames
+    the kernel didn't see (J2 analog — key-based, never order-based).
     """
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    names = feature_names(families, lags, levels)
+    tlen = F.length("text").cast("double").alias("tlen")
     if passthrough:
-        base_fields = list(df.schema.fields) + [
-            T.StructField("tlen", T.DoubleType(), True)
-        ]
-        prep_cols = [F.col(c) for c in df.columns] + [
-            F.length(F.col(text_col)).cast("double").alias("tlen")
-        ]
+        prep = df.select("*", tlen)
+        keep = list(df.schema.fields) + [T.StructField("tlen", T.DoubleType(), True)]
     else:
-        base_fields = [
-            T.StructField(conv_col, df.schema[conv_col].dataType, False),
-            T.StructField("turn_idx", df.schema["turn_idx"].dataType, False),
-        ]
-        prep_cols = [
-            F.col(conv_col),
-            F.col("turn_idx"),
-            F.col("ts"),
-            F.col(role_col).alias("role"),
-            F.col(tool_col).alias("tool"),
-            F.length(F.col(text_col)).cast("double").alias("tlen"),
-        ]
-    schema = T.StructType(
-        base_fields + [T.StructField(nm, T.DoubleType(), True) for nm in names]
+        prep = df.select("conv_id", "turn_idx", "ts", "role", "tool", tlen)
+        keep = [df.schema["conv_id"], df.schema["turn_idx"]]
+    fields = keep + [
+        T.StructField(nm, T.DoubleType(), True)
+        for nm in feature_names(families, lags, levels)
+    ]
+    return conversation_pass(
+        prep, fields,
+        lambda t, rb: kernel_features(t, families, lags, levels),
+        num_partitions,
     )
-
-    prep = df.select(*prep_cols)
-    nparts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    prep = prep.repartition(nparts, conv_col).sortWithinPartitions(
-        conv_col, *order_cols
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        guard_zip_caches()
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            last_conv = pdf[conv_col].iloc[-1]
-            tail = pdf[conv_col] == last_conv
-            # keep the (possibly continuing) last conversation for the
-            # next batch; emit everything before it
-            carry = pdf[tail.to_numpy()]
-            head = pdf[~tail.to_numpy()]
-            if len(head):
-                yield compute_features_pdf(
-                    head, families, lags, levels, conv_col, order_cols,
-                    passthrough=passthrough, assume_sorted=True,
-                )
-        if carry is not None and len(carry):
-            yield compute_features_pdf(
-                carry, families, lags, levels, conv_col, order_cols,
-                passthrough=passthrough, assume_sorted=True,
-            )
-
-    return prep.mapInPandas(gen, schema)

@@ -75,23 +75,6 @@ def with_split(
     return df.withColumn(out_col, expr)
 
 
-def split_bounds_sql(
-    weights: Sequence[tuple[str, float]] = (
-        ("train", 0.9),
-        ("val", 0.05),
-        ("test", 0.05),
-    ),
-) -> list[tuple[str, str]]:
-    """(label, upper-hex-bound) pairs for reproducing the assignment in
-    external SQL (the last label has no bound — it's the ELSE)."""
-    out = []
-    cum = 0.0
-    for name, w in weights[:-1]:
-        cum += w
-        out.append((name, _bound_hex(cum)))
-    return out
-
-
 def pack_documents(
     df: DataFrame,
     budget: int,

@@ -1,7 +1,7 @@
 """Fused single-shuffle feature pipeline — the 100 TB hot path.
 
 The composable pipeline (plans/pipeline.py) is Catalyst-first: window
-families as built-in expressions, kernels as one mapInPandas, as-of as
+families as built-in expressions, kernels as one Arrow pass, as-of as
 a union-window. Ideal for ad-hoc feature subsets — but for the FULL
 feature vector it carries ~120 columns through a window sort and an
 as-of shuffle. Measured on 32 cores, those wide-row stages burn ~3×
@@ -28,10 +28,12 @@ there (leakage, determinism, text equality) transfers.
 
 from __future__ import annotations
 
+import time as _time
 from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -39,12 +41,15 @@ from pyspark.sql import types as T
 from nuclei_feature_extraction_spark.functions.kernels import (
     DEFAULT_LAGS,
     DEFAULT_LEVELS,
-    compute_features_pdf,
+    Turns,
+    conversation_pass,
+    decode,
     feature_names,
+    kernel_features,
+    seg_first,
     _seg_cumsum,
     _seg_pos,
 )
-from nuclei_feature_extraction_spark.zipcache import guard_zip_caches
 
 TWO_PI = 2.0 * 3.141592653589793
 
@@ -68,27 +73,20 @@ WINDOW_FEATURE_COLS = (
 )
 
 
-def _seg_shift_obj(arr: np.ndarray, pos: np.ndarray, k: int) -> np.ndarray:
-    out = np.empty(len(arr), dtype=object)
+def _seg_shift(arr: np.ndarray, pos: np.ndarray, k: int, fill) -> np.ndarray:
     ok = pos >= k
     idx = np.maximum(np.arange(len(arr)) - k, 0)
-    out[ok] = arr[idx[ok]]
-    out[~ok] = None
-    return out
+    return np.where(ok, arr[idx], fill)
 
 
-def _seg_shift_f(arr: np.ndarray, pos: np.ndarray, k: int) -> np.ndarray:
-    ok = pos >= k
-    idx = np.maximum(np.arange(len(arr)) - k, 0)
-    return np.where(ok, arr[idx], np.nan)
-
-
-def _window_features_pdf(
-    pdf: pd.DataFrame, gap_minutes: float = 30.0, pos_offset: int = 0
-) -> pd.DataFrame:
-    """All window-family features over a sorted multi-conversation chunk,
+def window_features(
+    t: Turns, gap_minutes: float = 30.0, pos_offset: int = 0
+) -> dict[str, np.ndarray]:
+    """All window-family features over sorted whole conversations,
     numerically equal (1e-9) to the Catalyst expressions in
-    operators/windows.py (pinned by test_fused.py).
+    operators/windows.py (pinned by test_fused.py). ``role_lag{k}`` are
+    codes into ``t.roles`` (-1 for null); ``session_id`` is int32; every
+    other column is float64.
 
     Trailing mean/std for EVERY (signal, window) pair come from ONE
     segmented cumsum pass over a single (n, k) block — rolling sum =
@@ -98,34 +96,19 @@ def _window_features_pdf(
     the per-segment partial sums (groupby cumsum restarts per
     conversation, so nothing leaks across segments). Only min/max keep
     the pandas rolling deque (no cumsum identity exists)."""
-    conv, _ = pd.factorize(pdf["conv_id"].to_numpy(), sort=False)
-    n = len(pdf)
-    first = np.empty(n, dtype=bool)
-    first[0] = True
-    first[1:] = conv[1:] != conv[:-1]
+    first = seg_first(t.conv)
+    n = len(first)
     # pos_offset: ABSOLUTE position of row 0 within its conversation —
     # used by the streaming path, whose frame is a single conversation's
     # carried tail + new rows (position-dependent terms: gabor carriers,
-    # window-fill counts, lag validity). Batch chunks pass 0.
+    # window-fill counts, lag validity). Batch passes use 0.
     pos = _seg_pos(first) + pos_offset
     seg = np.cumsum(first)
 
-    tlen = pdf["tlen"].to_numpy(dtype=np.float64)
-    # role arrives CATEGORICAL from the fused plan (dictionary-encoded
-    # so strings never box into Python objects) and as strings from the
-    # streaming path; categorical lags are computed on the codes and
-    # emitted as Categoricals with the same categories.
-    role_cat: pd.Categorical | None = None
-    if isinstance(pdf["role"].dtype, pd.CategoricalDtype):
-        role_cat = pdf["role"].array
-        role_codes = role_cat.codes.astype(np.int64, copy=False)
-        try:
-            asst_code = role_cat.categories.get_loc("assistant")
-        except KeyError:
-            asst_code = -2
-    else:
-        role = pdf["role"].to_numpy()
-    us = pdf["ts"].to_numpy(dtype="datetime64[us]").astype(np.int64)
+    tlen = t.tlen
+    role = t.role
+    asst_code = list(t.roles).index("assistant") if "assistant" in t.roles else -2
+    us = t.ts_us
     sec = us / 1e6
 
     out: dict[str, np.ndarray] = {}
@@ -135,29 +118,19 @@ def _window_features_pdf(
     # stateful sessionizer — the previous divide-by-1e6-then-subtract
     # form could drift ~1e-7 s and flip a row sitting exactly on the
     # 30-min boundary.
-    prev_us = _seg_shift_f(us.astype(np.float64), pos, 1)
+    prev_us = _seg_shift(us.astype(np.float64), pos, 1, np.nan)
     new_sess = (~np.isnan(prev_us)) & (
         (us - prev_us) > gap_minutes * 60.0 * 1e6
     )
     out["session_id"] = _seg_cumsum(new_sess.astype(np.float64), first).astype(
         np.int32
     )
-    role_lags: dict[str, object] = {}
     for k in (1, 2, 3):
-        out[f"tlen_lag{k}"] = _seg_shift_f(tlen, pos, k)
-        if role_cat is not None:
-            lagged = _seg_shift_f(role_codes.astype(np.float64), pos, k)
-            lag_codes = np.where(np.isnan(lagged), -1, lagged).astype(np.int64)
-            role_lags[f"role_lag{k}"] = pd.Categorical.from_codes(
-                lag_codes, categories=role_cat.categories
-            )
-        else:
-            role_lags[f"role_lag{k}"] = _seg_shift_obj(role, pos, k)
+        out[f"tlen_lag{k}"] = _seg_shift(tlen, pos, k, np.nan)
+        out[f"role_lag{k}"] = _seg_shift(role, pos, k, -1)
 
     theta = (sec % 86400.0) / 86400.0 * TWO_PI
-    is_asst = (
-        role_codes == asst_code if role_cat is not None else role == "assistant"
-    )
+    is_asst = role == asst_code
     masked0 = np.where(is_asst, tlen, 0.0)  # NaN-as-0 + separate count
 
     # ---- one cumsum block of every moment needed ----------------------
@@ -257,19 +230,7 @@ def _window_features_pdf(
     gt = pd.Series(tlen).groupby(seg, sort=False).rolling(20, min_periods=1)
     out["tlen_r20_min"] = gt.min().to_numpy()
     out["tlen_r20_max"] = gt.max().to_numpy()
-
-    # single-block assembly (no per-column consolidation)
-    float_names = [nm for nm in out if out[nm].dtype.kind == "f"]
-    fblock = np.empty((len(float_names), n))
-    for i, nm in enumerate(float_names):
-        fblock[i] = out[nm]
-    res = pd.DataFrame(
-        fblock.T, columns=float_names, index=pdf.index, copy=False
-    )
-    res["session_id"] = out["session_id"]
-    for k in (1, 2, 3):
-        res[f"role_lag{k}"] = role_lags[f"role_lag{k}"]
-    return res
+    return out
 
 
 def _asof_arrays(side: pd.DataFrame):
@@ -305,25 +266,21 @@ def _searchsorted_pick(
     rts: np.ndarray, vals: dict[str, tuple], ts_us: np.ndarray
 ) -> dict[str, object]:
     """Rightmost side row with rts <= ts per output row, per value
-    column: float64 with NaN, object with None, or a Categorical with
-    code -1 where no side row qualifies."""
+    column: float64 with NaN, or an Arrow array with null, where no
+    side row qualifies."""
     idx = np.searchsorted(rts, ts_us, side="right") - 1
     ok = idx >= 0
     safe = np.clip(idx, 0, None)
     out: dict[str, object] = {}
     for c, spec in vals.items():
         if spec[0] == "cat":
-            p = spec[1][safe]
-            p[~ok] = -1
-            out[c] = pd.Categorical.from_codes(p, categories=pd.Index(spec[2]))
+            out[c] = decode(np.where(ok, spec[1][safe], -1), spec[2])
         elif spec[1].dtype.kind == "f":
             v = spec[1][safe].astype(np.float64)
             v[~ok] = np.nan
             out[c] = v
         else:
-            v = spec[1][safe].astype(object)
-            v[~ok] = None
-            out[c] = v
+            out[c] = pa.array(spec[1][safe], mask=~ok)
     return out
 
 
@@ -364,12 +321,14 @@ def build_features_fused(
     """Single-shuffle full feature vector; column-compatible with
     ``build_features(df, ["all"], side_profile, side_config)``.
 
-    The kernel pass is one ``mapInArrow``: strings never box into
-    Python objects (conv_id/role dictionary-encode C-side, text/tool
-    pass through zero-copy, string outputs decode from dictionary codes
-    C-side). Every timestamp — the input rows' and the broadcast side
-    arrays' — is compared as UTC epoch microseconds, so the output does
-    not depend on the session time zone. A null ``conv_id`` is one
+    The kernel pass is the shared ``mapInArrow`` worker
+    (:func:`~nuclei_feature_extraction_spark.functions.kernels.conversation_pass`):
+    strings never box into Python objects (conv_id/role
+    dictionary-encode C-side, text/tool pass through zero-copy, role
+    lags and side-table picks decode from dictionary codes C-side).
+    Every timestamp — the input rows' and the broadcast side arrays' —
+    is compared as UTC epoch microseconds, so the output does not
+    depend on the session time zone. A null ``conv_id`` is one
     conversation, as in the composable pipeline's ``partitionBy``.
 
     Side tables within ``max_broadcast_side_rows`` ride into the kernel
@@ -480,179 +439,83 @@ def build_features_fused(
         for c in cpd.columns:
             if c != "effective_ts":
                 fields.append(T.StructField(c, side_config.schema[c].dataType, True))
-    schema = T.StructType(fields)
 
     prep = df.select("*", F.length("text").cast("double").alias("tlen"))
-    nparts = num_partitions or spark.sparkContext.defaultParallelism
-    prep = prep.repartition(nparts, "conv_id").sortWithinPartitions(
-        "conv_id", "ts", "turn_idx"
-    )
 
-    out_names = [f.name for f in fields]
-    passthrough_names = set(df.columns) | {"tlen"}
-
-    def gen(batches):
-        """The six narrow input columns cross the boundary ONCE as Arrow
-        buffers; conv_id/role are dictionary-encoded (C-side)
-        instead of boxed into Python strings; text/tool pass through
-        into the output batch ZERO-COPY without ever becoming Python
-        objects; string outputs (role lags, side picks) are built as
-        dictionary codes and decoded C-side. A conversation that runs
-        past a batch boundary is carried into the next batch whole."""
-        guard_zip_caches()
-        import time as _time
-
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        def to_arrow_col(v: pd.Series):
-            if isinstance(v.dtype, pd.CategoricalDtype):
-                cat = v.array
-                codes = np.asarray(cat.codes)
-                ind = pa.array(codes.astype(np.int32), mask=codes < 0)
-                da = pa.DictionaryArray.from_arrays(
-                    ind,
-                    pa.array(
-                        np.asarray(cat.categories, dtype=object),
-                        type=pa.string(),
-                    ),
-                )
-                return da.dictionary_decode()
-            # from_pandas=True masks NaN/None → null
-            return pa.array(v.to_numpy(), from_pandas=True)
-
-        def emit(tbl: "pa.Table") -> "pa.RecordBatch":
-            tbl = tbl.combine_chunks()
-            col = {nm: tbl.column(nm).chunk(0) for nm in tbl.column_names}
-            cd = pc.dictionary_encode(col["conv_id"])
-            # null conv_ids share one code of their own: one conversation
-            conv_codes = cd.indices.fill_null(len(cd.dictionary)).to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64, copy=False)
-            rd = pc.dictionary_encode(col["role"])
-            role_cat = pd.Categorical.from_codes(
-                rd.indices.fill_null(-1).to_numpy(zero_copy_only=False),
-                categories=rd.dictionary.to_pylist(),
-            )
-            tool_isnull = col["tool"].is_null().to_numpy(zero_copy_only=False)
-            chunk = pd.DataFrame(
-                {
-                    "conv_id": conv_codes,
-                    "turn_idx": col["turn_idx"].to_numpy(zero_copy_only=False),
-                    "role": role_cat,
-                    "tool": np.where(tool_isnull, np.nan, 0.0),
-                    "ts": col["ts"].to_numpy(zero_copy_only=False),
-                    "tlen": col["tlen"].to_numpy(zero_copy_only=False),
-                }
-            )
-
-            prof, cfg = bc.value
-            tm: dict | None = {} if kernel_timers is not None else None
-            out = compute_features_pdf(
-                chunk, ("cooc", "runlen", "xcooc", "shape"), lags, levels,
-                passthrough=True, assume_sorted=True, timings=tm,
-            )
+    def compute(t: Turns, rb: pa.RecordBatch) -> dict[str, object]:
+        """Every non-passthrough column of one batch of whole
+        conversations: kernels, window families (role lags decoded from
+        their codes) and the side-table picks."""
+        prof, cfg = bc.value
+        tm: dict | None = {} if kernel_timers is not None else None
+        out: dict[str, object] = kernel_features(
+            t, ("cooc", "runlen", "xcooc", "shape"), lags, levels, timings=tm
+        )
+        _t0 = _time.perf_counter()
+        out.update(window_features(t, gap_minutes))
+        for k in (1, 2, 3):
+            out[f"role_lag{k}"] = decode(out[f"role_lag{k}"], t.roles)
+        if tm is not None:
+            tm["window"] = _time.perf_counter() - _t0
             _t0 = _time.perf_counter()
-            win = _window_features_pdf(out, gap_minutes)
-            if tm is not None:
-                tm["window"] = _time.perf_counter() - _t0
-                _t0 = _time.perf_counter()
-            # column-wise adoption instead of pd.concat(axis=1): concat
-            # consolidates the two frames' float blocks (a full-width
-            # memcpy); per-column assignment just appends block refs
-            for c in win.columns:
-                out[c] = win[c].values
-            del win  # setitem copied its columns: free the block now
-            ts_us = out["ts"].to_numpy(dtype="datetime64[us]").astype(np.int64)
-            if prof is not None:
-                pconv, n_null, prts, ppl_codes, ppl_cats, psc = prof
-                # per-CONVERSATION string searches (one per conv, repeated
-                # to rows), then one fully VECTORIZED bounded binary
-                # search for the rightmost side row with rts ≤ ts inside
-                # each conv's side block — ~log2(max block) numpy passes,
-                # zero Python per-row/per-conv work (the round-2
-                # per-conversation loop pinned one core on
-                # many-conversation chunks)
-                starts = np.flatnonzero(
-                    np.r_[True, conv_codes[1:] != conv_codes[:-1]]
-                )
-                counts = np.diff(np.r_[starts, len(out)])
-                # natural-width str, NOT pconv.dtype: casting to the
-                # profile's fixed '<U' width would truncate longer
-                # out-of-profile ids to a prefix that can falsely match
-                sel = col["conv_id"].take(pa.array(starts))
-                cids = np.asarray(sel.fill_null("").to_pylist(), dtype=str)
-                # a null id owns the profile's leading null-conv block,
-                # like the composable as-of's partitionBy; str(None) =
-                # 'None' would match a profile row keyed "None"
-                valid = sel.is_valid().to_numpy(zero_copy_only=False)
-                blo = np.where(
-                    valid, np.searchsorted(pconv, cids, side="left") + n_null, 0
-                )
-                bhi = np.where(
-                    valid, np.searchsorted(pconv, cids, side="right") + n_null,
-                    n_null,
-                )
-                blo, bhi = np.repeat(blo, counts), np.repeat(bhi, counts)
-                lo, hi = blo.copy(), bhi.copy()
-                while True:
-                    active = lo < hi
-                    if not active.any():
-                        break
-                    mid = (lo + hi) >> 1
-                    le = np.zeros(len(lo), dtype=bool)
-                    am = mid[active]
-                    le[active] = prts[am] <= ts_us[active]
-                    lo = np.where(active & le, mid + 1, lo)
-                    hi = np.where(active & ~le, mid, hi)
-                idx = lo - 1
-                ok = idx >= blo  # empty block (blo == bhi) → idx < blo
-                safe = np.clip(idx, 0, None)
-                pick = ppl_codes[safe]
-                pick[~ok] = -1
-                score = psc[safe].astype(np.float64)
-                score[~ok] = np.nan
-                out["plan"] = pd.Categorical.from_codes(
-                    pick, categories=pd.Index(ppl_cats)
-                )
-                out["score"] = score
-            if cfg is not None:
-                for c, v in _searchsorted_pick(cfg[0], cfg[1], ts_us).items():
-                    out[c] = v
-            if tm is not None:
-                tm["sidelookup"] = _time.perf_counter() - _t0
-                for fam, secs in tm.items():
-                    acc = kernel_timers.get(fam)
-                    if acc is not None:
-                        acc.add(secs)
-            arrays = [
-                col[nm] if nm in passthrough_names else to_arrow_col(out[nm])
-                for nm in out_names
-            ]
-            return pa.RecordBatch.from_arrays(arrays, names=out_names)
+        ts_us = t.ts_us
+        if prof is not None:
+            pconv, n_null, prts, ppl_codes, ppl_cats, psc = prof
+            # per-CONVERSATION string searches (one per conv, repeated
+            # to rows), then one fully VECTORIZED bounded binary
+            # search for the rightmost side row with rts ≤ ts inside
+            # each conv's side block — ~log2(max block) numpy passes,
+            # zero Python per-row/per-conv work (the round-2
+            # per-conversation loop pinned one core on
+            # many-conversation chunks)
+            starts = np.flatnonzero(seg_first(t.conv))
+            counts = np.diff(np.r_[starts, rb.num_rows])
+            # natural-width str, NOT pconv.dtype: casting to the
+            # profile's fixed '<U' width would truncate longer
+            # out-of-profile ids to a prefix that can falsely match
+            sel = rb.column("conv_id").take(pa.array(starts))
+            cids = np.asarray(sel.fill_null("").to_pylist(), dtype=str)
+            # a null id owns the profile's leading null-conv block,
+            # like the composable as-of's partitionBy; str(None) =
+            # 'None' would match a profile row keyed "None"
+            valid = sel.is_valid().to_numpy(zero_copy_only=False)
+            blo = np.where(
+                valid, np.searchsorted(pconv, cids, side="left") + n_null, 0
+            )
+            bhi = np.where(
+                valid, np.searchsorted(pconv, cids, side="right") + n_null,
+                n_null,
+            )
+            blo, bhi = np.repeat(blo, counts), np.repeat(bhi, counts)
+            lo, hi = blo.copy(), bhi.copy()
+            while True:
+                active = lo < hi
+                if not active.any():
+                    break
+                mid = (lo + hi) >> 1
+                le = np.zeros(len(lo), dtype=bool)
+                am = mid[active]
+                le[active] = prts[am] <= ts_us[active]
+                lo = np.where(active & le, mid + 1, lo)
+                hi = np.where(active & ~le, mid, hi)
+            idx = lo - 1
+            ok = idx >= blo  # empty block (blo == bhi) → idx < blo
+            safe = np.clip(idx, 0, None)
+            out["plan"] = decode(np.where(ok, ppl_codes[safe], -1), ppl_cats)
+            score = psc[safe].astype(np.float64)
+            score[~ok] = np.nan
+            out["score"] = score
+        if cfg is not None:
+            out.update(_searchsorted_pick(cfg[0], cfg[1], ts_us))
+        if tm is not None:
+            tm["sidelookup"] = _time.perf_counter() - _t0
+            for fam, secs in tm.items():
+                acc = kernel_timers.get(fam)
+                if acc is not None:
+                    acc.add(secs)
+        return out
 
-        carry = None
-        for b in batches:
-            tbl = pa.Table.from_batches([b])
-            if carry is not None and carry.num_rows:
-                tbl = pa.concat_tables([carry, tbl])
-            if tbl.num_rows == 0:
-                continue
-            conv = tbl.column("conv_id")
-            if conv[-1].is_valid:
-                n_tail = pc.sum(pc.equal(conv, conv[-1])).as_py()
-            else:
-                # nulls sort first, so a null last id means every row
-                # of the table belongs to the null conversation
-                n_tail = conv.null_count
-            head = tbl.slice(0, tbl.num_rows - n_tail)
-            carry = tbl.slice(tbl.num_rows - n_tail).combine_chunks()
-            if head.num_rows:
-                yield emit(head)
-        if carry is not None and carry.num_rows:
-            yield emit(carry)
-
-    out = prep.mapInArrow(gen, schema)
+    out = conversation_pass(prep, fields, compute, num_partitions)
     if fallback_profile is not None:
         from nuclei_feature_extraction_spark.operators.asof import asof_join
 

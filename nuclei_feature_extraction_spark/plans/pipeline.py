@@ -2,14 +2,14 @@
 dataflow, /root/reference/src/main.rs:110-190, re-planned for Catalyst).
 
 ``build_features`` expands the requested feature-set names (registry),
-applies every window family as Catalyst expressions sharing ONE
-conversation window sort, computes all kernel families in ONE
-``mapInPandas`` pass (the CSE the reference misses — texture.rs:36,189,332
-re-derives grayscale per kernel), joins kernels back on the
-``(conv_id, turn_idx)`` key (J2 analog: key-addressed, never
-order-addressed — fixing the reference's fragile order-equality assert,
-main.rs:76-79), then attaches side tables via as-of joins, and finally
-runs the static leakage audit.
+computes all kernel families in ONE Arrow pass (``prefix_features``,
+the CSE the reference misses — texture.rs:36,189,332 re-derives
+grayscale per kernel) that emits every input column row-aligned with
+the features, so no key join is needed (the reference's fragile
+order-equality assert, main.rs:76-79, has no analog), then applies
+every window family as Catalyst expressions sharing ONE conversation
+window sort, attaches side tables via as-of joins, and finally runs the
+static leakage audit.
 """
 
 from __future__ import annotations
@@ -65,7 +65,7 @@ def build_features(
     """
     names = expand_feature_sets(feature_sets)
 
-    # kernels FIRST, in passthrough mode: the mapInPandas pass emits all
+    # kernels FIRST, in passthrough mode: the Arrow pass emits all
     # input columns + features row-aligned, so no (conv_id, turn_idx)
     # sort-merge join is needed (measured at bench scale: that join cost
     # more than the kernels themselves); window features stack on top.

@@ -8,7 +8,7 @@ conversation's LAST ≤64 RAW ROWS plus three scalars (the absolute
 position and session id of the carried tail's first row, and the total
 rows seen). Each micro-batch synthesizes the frame [carried tail + new
 rows] and runs the SAME vectorized numpy implementation the fused batch
-plan uses (``plans.fused._window_features_pdf``) with the absolute
+plan uses (``plans.fused.window_features``) with the absolute
 position offset — so batch==streaming parity is by construction, not by
 re-derivation — then emits only the new rows' features and keeps the
 new tail.
@@ -27,9 +27,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from nuclei_feature_extraction_spark.functions.kernels import Turns
 from nuclei_feature_extraction_spark.plans.fused import (
     WINDOW_FEATURE_COLS,
-    _window_features_pdf,
+    window_features,
 )
 from nuclei_feature_extraction_spark.zipcache import guard_zip_caches
 
@@ -166,22 +167,21 @@ def _update(
 
     t = len(tail_us)
     m = len(us_new)
-    frame = pd.DataFrame(
-        {
-            "conv_id": key[0],
-            "ts": np.concatenate(
-                [np.array(tail_us, dtype=np.int64), us_new]
-            ).astype("datetime64[us]"),
-            "role": np.concatenate(
-                [np.array(tail_role, dtype=object), role_new]
-            ),
-            "tlen": np.concatenate(
-                [np.array(tail_tlen, dtype=np.float64), tlen_new]
-            ),
-        }
+    all_us = np.concatenate([np.array(tail_us, dtype=np.int64), us_new])
+    all_tlen = np.concatenate(
+        [np.array(tail_tlen, dtype=np.float64), tlen_new]
     )
-    res = _window_features_pdf(frame, gap_minutes, pos_offset=int(pos0))
-    sess = base_session + res["session_id"].to_numpy().astype(np.int64)
+    all_role = np.concatenate([np.array(tail_role, dtype=object), role_new])
+    role_codes, roles = pd.factorize(all_role)
+    res = window_features(
+        Turns(
+            conv=np.zeros(t + m, dtype=np.int64), ts_us=all_us,
+            role=role_codes.astype(np.int64), roles=roles, has_tool=None,
+            tlen=all_tlen,
+        ),
+        gap_minutes, pos_offset=int(pos0),
+    )
+    sess = base_session + res["session_id"].astype(np.int64)
 
     data = {
         "conv_id": key[0],
@@ -189,19 +189,15 @@ def _update(
         "ts": us_new.astype("datetime64[us]"),
         "session_id": sess[t:].astype(np.int32),
     }
+    role_or_null = np.append(roles.astype(object), None)  # code -1 → None
     for k in (1, 2, 3):
-        data[f"role_lag{k}"] = res[f"role_lag{k}"].to_numpy()[t:]
+        data[f"role_lag{k}"] = role_or_null[res[f"role_lag{k}"][t:]]
     for c in _FLOAT_COLS:
-        data[c] = res[c].to_numpy()[t:]
+        data[c] = res[c][t:]
 
     # new tail = the frame's last ≤64 rows
     keep = min(TAIL, t + m)
     cut = t + m - keep
-    all_us = np.concatenate([np.array(tail_us, dtype=np.int64), us_new])
-    all_tlen = np.concatenate(
-        [np.array(tail_tlen, dtype=np.float64), tlen_new]
-    )
-    all_role = np.concatenate([np.array(tail_role, dtype=object), role_new])
     tail_us = [int(v) for v in all_us[cut:]]
     tail_tlen = [float(v) for v in all_tlen[cut:]]
     tail_role = [str(v) for v in all_role[cut:]]

@@ -2,6 +2,7 @@
 
 import numpy as np
 import pandas as pd
+from local_features import local_kernel_features
 
 from nuclei_feature_extraction_spark.functions import kernels
 from nuclei_feature_extraction_spark.operators import asof_join
@@ -66,12 +67,8 @@ def test_mega_conversation_kernels(spark):
         .reset_index(drop=True)
     )
     assert len(got) == n
-    local = pdf.copy()
-    local["tlen"] = local["text"].str.len().astype(float)
     want = (
-        kernels.compute_features_pdf(
-            local, ("cooc", "runlen"), lags=(1,), levels=(4,)
-        )
+        local_kernel_features(pdf, ("cooc", "runlen"), lags=(1,), levels=(4,))
         .sort_values("turn_idx")
         .reset_index(drop=True)
     )

@@ -3,7 +3,10 @@ column for column (transfers all leakage/determinism properties)."""
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import functions as F
 
+from nuclei_feature_extraction_spark.functions import oracle
+from nuclei_feature_extraction_spark.functions.kernels import prefix_features
 from nuclei_feature_extraction_spark.plans.fused import build_features_fused
 from nuclei_feature_extraction_spark.plans.pipeline import build_features
 
@@ -119,17 +122,57 @@ def test_fused_full_reference_grid_parity(spark, tiny_df, side_profile_df, side_
     assert len(fused.columns) > 380, len(fused.columns)
 
 
+def _dst_conversation(n: int = 40) -> pd.DataFrame:
+    """One conversation across America/New_York's 2024-11-03 fall-back
+    (06:00 UTC: 02:00 EDT becomes 01:00 EST), a turn every 3 minutes —
+    its local wall times repeat an hour."""
+    return pd.DataFrame(
+        {
+            "conv_id": "dst-fall-back",
+            "turn_idx": np.arange(n, dtype=np.int32),
+            "role": np.array(["user", "assistant"])[np.arange(n) % 2],
+            "text": ["z" * (3 + (7 * i) % 50) for i in range(n)],
+            "tool": None,
+            "ts": pd.Timestamp("2024-11-03 05:00")
+            + pd.to_timedelta(np.arange(n) * 180, unit="s"),
+        }
+    )
+
+
 def test_fused_matches_composable_non_utc_session(
     spark, tiny_df, side_profile_df, side_config_df
 ):
-    """Under a non-UTC session the fused plan still compares every
-    timestamp as UTC epoch microseconds, like the composable pipeline
-    (time-of-day features and both as-of lookups included)."""
+    """Under a non-UTC session both plans still compare every timestamp
+    as UTC epoch microseconds (time-of-day features, both as-of lookups
+    and the shape kernel's elapsed seconds included), also over a
+    conversation across a DST fall-back."""
+    dst = _dst_conversation()
+    # built under the UTC session: ``ts`` holds the UTC instants above
+    df = tiny_df.unionByName(spark.createDataFrame(dst, schema=tiny_df.schema))
+    want = oracle.shape_prefix_naive(
+        (dst["ts"] - dst["ts"].iloc[0]).dt.total_seconds().to_numpy(),
+        dst["text"].str.len().to_numpy(dtype=float),
+    )
     key = "spark.sql.session.timeZone"
     old = spark.conf.get(key)
-    spark.conf.set(key, "Asia/Kolkata")
     try:
-        _assert_matches_composable(tiny_df, side_profile_df, side_config_df)
+        for tz in ("Asia/Kolkata", "America/New_York"):
+            spark.conf.set(key, tz)
+            _assert_matches_composable(df, side_profile_df, side_config_df)
+            got = (
+                prefix_features(
+                    df.filter(F.col("conv_id") == "dst-fall-back"),
+                    families=("shape",),
+                )
+                .toPandas()
+                .sort_values("turn_idx")
+            )
+            for s in oracle.SHAPE_STATS:
+                np.testing.assert_allclose(
+                    got[f"shape_{s}"].to_numpy(), want[s],
+                    rtol=1e-6, atol=3e-5, equal_nan=True,
+                    err_msg=f"{tz} shape_{s}",
+                )
     finally:
         spark.conf.set(key, old)
 

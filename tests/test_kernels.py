@@ -6,6 +6,7 @@ import pytest
 
 from nuclei_feature_extraction_spark.functions import kernels, oracle
 from nuclei_feature_extraction_spark.fixtures import gen_transcripts
+from local_features import local_kernel_features
 
 RNG = np.random.default_rng(123)
 
@@ -158,10 +159,10 @@ def test_hull_prefix_multi_conversation_isolation():
     np.testing.assert_allclose(perim[5], wp5)
 
 
-def test_compute_features_pdf_on_transcripts():
+def test_kernel_features_on_transcripts():
     pdf = gen_transcripts(10)
     pdf["tlen"] = pdf["text"].str.len().astype(float)
-    out = kernels.compute_features_pdf(pdf)
+    out = local_kernel_features(pdf)
     assert len(out) == len(pdf)
     expected = {"conv_id", "turn_idx"} | set(kernels.feature_names())
     assert set(out.columns) == expected
@@ -188,10 +189,8 @@ def test_prefix_features_spark_matches_local(spark, tiny_df, tiny_pdf):
         .sort_values(["conv_id", "turn_idx"])
         .reset_index(drop=True)
     )
-    local = tiny_pdf.copy()
-    local["tlen"] = local["text"].str.len().astype(float)
     want = (
-        kernels.compute_features_pdf(local, lags=(1,), levels=(4,))
+        local_kernel_features(tiny_pdf, lags=(1,), levels=(4,))
         .sort_values(["conv_id", "turn_idx"])
         .reset_index(drop=True)
     )
@@ -203,35 +202,121 @@ def test_prefix_features_spark_matches_local(spark, tiny_df, tiny_pdf):
         )
 
 
+def _null_conv_turns(n: int = 20) -> pd.DataFrame:
+    """One conversation with a null ``conv_id``, a turn every 3 minutes."""
+    return pd.DataFrame(
+        {
+            "conv_id": [None] * n,
+            "turn_idx": np.arange(n, dtype=np.int32),
+            "role": np.array(["user", "assistant", "tool"])[np.arange(n) % 3],
+            "text": ["y" * (5 + 7 * (i % 4)) for i in range(n)],
+            "tool": [None if i % 3 else "search" for i in range(n)],
+            "ts": pd.Timestamp("2024-03-01")
+            + pd.to_timedelta(np.arange(n) * 180, unit="s"),
+        }
+    )
+
+
 def test_prefix_features_batch_stitching(spark, tiny_df, tiny_pdf):
     """Force tiny Arrow batches so conversations straddle batch
-    boundaries; the carry buffer must stitch them losslessly."""
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "17")
-    try:
-        got = (
-            kernels.prefix_features(
-                tiny_df, families=("runlen",), num_partitions=2
-            )
-            .toPandas()
-            .sort_values(["conv_id", "turn_idx"])
-            .reset_index(drop=True)
-        )
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-    local = tiny_pdf.copy()
-    local["tlen"] = local["text"].str.len().astype(float)
-    want = (
-        kernels.compute_features_pdf(local, families=("runlen",))
-        .sort_values(["conv_id", "turn_idx"])
-        .reset_index(drop=True)
+    boundaries; the carry must stitch them losslessly, in the composable
+    and the fused pass alike. A null ``conv_id`` is one conversation
+    too: it must not restart at every batch."""
+    from nuclei_feature_extraction_spark.plans.fused import build_features_fused
+
+    df = tiny_df.unionByName(
+        spark.createDataFrame(_null_conv_turns(), schema=tiny_df.schema)
     )
-    assert len(got) == len(tiny_pdf)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+
+    def run(batch_rows):
+        spark.conf.set(key, str(batch_rows))
+        try:
+            comp = kernels.prefix_features(
+                df, families=("runlen",), num_partitions=1
+            ).toPandas()
+            fused = build_features_fused(
+                df, lags=(1,), levels=(4,), num_partitions=1
+            ).drop("text", "tool", "ts", "role").toPandas()
+        finally:
+            spark.conf.set(key, old)
+        return [
+            p.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+            for p in (comp, fused)
+        ]
+
+    small, whole = run(7), run(100_000)
+    for got, want in zip(small, whole):
+        assert len(got) == len(want) == len(tiny_pdf) + 20
+        for c in want.columns:
+            if want[c].dtype.kind == "f":
+                np.testing.assert_allclose(
+                    got[c].to_numpy(), want[c].to_numpy(),
+                    rtol=1e-9, atol=1e-9, equal_nan=True, err_msg=c,
+                )
+            else:
+                assert got[c].equals(want[c]), c
+    nulls = small[0][small[0]["conv_id"].isna()]
+    np.testing.assert_array_equal(
+        nulls["runlen_n_runs_role"].to_numpy(), np.arange(1, 21)
+    )
+    local = local_kernel_features(tiny_pdf, families=("runlen",))
+    local = local.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     np.testing.assert_allclose(
-        got["runlen_gln_role"].to_numpy(),
-        want["runlen_gln_role"].to_numpy(),
+        small[0]["runlen_gln_role"].to_numpy()[: len(local)],
+        local["runlen_gln_role"].to_numpy(),
         rtol=1e-9, equal_nan=True,
     )
+
+
+def test_whole_conversations_copies_each_row_at_most_once(monkeypatch):
+    """The carry loop regroups sorted batches into whole conversations:
+    a null conversation ending a batch, empty batches, one conversation
+    over 200 batches and a new id at every batch boundary. Joining the
+    carried slices copies each row at most once (re-joining the carry on
+    every batch is quadratic in the conversation length)."""
+    import pyarrow as pa
+
+    parts = [[None] * 3, [], [None, None, "a", "a"], ["a", "b"]]
+    for i in range(200):  # "b" over 200 batches, empty ones in between
+        parts += [["b"] * 5] + ([[]] if i % 7 == 0 else [])
+    parts += [[f"c{i:03d}", f"c{i + 1:03d}"] for i in range(0, 40, 2)]
+    parts += [["c040"], ["c040", "d"], ["e"]]
+    bounds = np.cumsum([0] + [len(ids) for ids in parts])
+    n_in = int(bounds[-1])
+    # x = input row number, to check the order
+    batches = [
+        pa.RecordBatch.from_arrays(
+            [pa.array(ids, pa.string()),
+             pa.array(np.arange(bounds[k], bounds[k + 1]))],
+            names=["conv_id", "x"],
+        )
+        for k, ids in enumerate(parts)
+    ]
+
+    copied = []
+    concat = kernels._concat
+
+    def counting(slices):
+        out = concat(slices)
+        copied.append(out.num_rows)
+        return out
+
+    monkeypatch.setattr(kernels, "_concat", counting)
+    out = list(kernels.whole_conversations(iter(batches)))
+    assert all(b.num_rows for b in out)
+    rows = np.concatenate([b.column("x").to_numpy() for b in out])
+    np.testing.assert_array_equal(rows, np.arange(n_in))
+    seen: dict = {}
+    for k, b in enumerate(out):
+        for cid in set(b.column("conv_id").to_pylist()):
+            seen.setdefault(cid, set()).add(k)
+    assert all(len(v) == 1 for v in seen.values()), seen
+    assert set(seen) == {None, "a", "b", "d", "e"} | {
+        f"c{i:03d}" for i in range(41)
+    }
+    assert sum(copied) <= 2 * n_in
 
 
 def test_xcooc_prefix_matches_naive():

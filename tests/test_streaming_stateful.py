@@ -388,9 +388,7 @@ def test_streaming_window_features_match_batch(spark, tiny_pdf, tmp_path):
     implementation, across a 3-micro-batch replay that slices every
     conversation twice — the carried 64-row tail must reproduce every
     lookback exactly."""
-    from nuclei_feature_extraction_spark.plans.fused import (
-        _window_features_pdf,
-    )
+    from local_features import local_window_features
     from nuclei_feature_extraction_spark.streaming.windows import (
         _FLOAT_COLS,
         streaming_window_features,
@@ -429,11 +427,7 @@ def test_streaming_window_features_match_batch(spark, tiny_pdf, tmp_path):
         spark.sql("SELECT * FROM swin").toPandas()
         .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     )
-    bpdf = pdf.copy()
-    bpdf["tlen"] = bpdf["text"].str.len().astype(float)
-    want = _window_features_pdf(bpdf.reset_index(drop=True))
-    want["conv_id"] = bpdf["conv_id"].to_numpy()
-    want["turn_idx"] = bpdf["turn_idx"].to_numpy()
+    want = local_window_features(pdf)
     want = want.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
 
     assert len(got) == len(want) == len(tiny_pdf)
@@ -643,9 +637,7 @@ def test_streaming_windows_out_of_order(spark, tiny_pdf, tmp_path):
     (the carried 64-row tail is never polluted by late arrivals)."""
     import pytest as _pytest
 
-    from nuclei_feature_extraction_spark.plans.fused import (
-        _window_features_pdf,
-    )
+    from local_features import local_window_features
     from nuclei_feature_extraction_spark.streaming.windows import (
         _FLOAT_COLS,
         streaming_window_features,
@@ -698,11 +690,7 @@ def test_streaming_windows_out_of_order(spark, tiny_pdf, tmp_path):
         spark.sql("SELECT * FROM oowdrop").toPandas()
         .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     )
-    bpdf = accepted.copy()
-    bpdf["tlen"] = bpdf["text"].str.len().astype(float)
-    want = _window_features_pdf(bpdf.reset_index(drop=True))
-    want["conv_id"] = bpdf["conv_id"].to_numpy()
-    want["turn_idx"] = bpdf["turn_idx"].to_numpy()
+    want = local_window_features(accepted)
     want = want.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     assert len(got) == len(want) == len(accepted) < len(tiny_pdf)
     assert (got["session_id"].to_numpy()
@@ -909,9 +897,7 @@ def test_streaming_windows_buffer_policy_batch_parity(
     """Window stack under late_policy='buffer': out-of-order replay ==
     batch window features over ALL rows (tail never polluted, nothing
     dropped)."""
-    from nuclei_feature_extraction_spark.plans.fused import (
-        _window_features_pdf,
-    )
+    from local_features import local_window_features
     from nuclei_feature_extraction_spark.streaming.features import (
         streaming_state_metrics,
     )
@@ -933,11 +919,7 @@ def test_streaming_windows_buffer_policy_batch_parity(
     assert metrics["n_late"].value == 0
     assert (sizes - sizes // 2).max() <= metrics["buffer_peak_depth"].value \
         <= sizes.max()
-    bpdf = tiny_pdf.sort_values(["conv_id", "ts", "turn_idx"]).copy()
-    bpdf["tlen"] = bpdf["text"].str.len().astype(float)
-    want = _window_features_pdf(bpdf.reset_index(drop=True))
-    want["conv_id"] = bpdf["conv_id"].to_numpy()
-    want["turn_idx"] = bpdf["turn_idx"].to_numpy()
+    want = local_window_features(tiny_pdf)
     want = want.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     assert len(got) == len(want) == len(tiny_pdf)
     assert (got["session_id"].to_numpy()
